@@ -981,7 +981,6 @@ def phash_topk(
     k: int = 5,
     phash_col: str = "phash",
     id_col: str = "image_id",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Banded approximate top-k perceptual-hash search (reverse-image
     lookup): for each query image, the ``k`` nearest corpus images by
@@ -990,7 +989,9 @@ def phash_topk(
     guarantees every corpus image within Hamming <= 3 is a candidate;
     beyond that recall follows the band-collision odds (the standard
     multi-index LSH search contract). Self-matches excluded; rank ties
-    break on corpus id, so the top-k is deterministic.
+    break on corpus id, so the top-k is deterministic. The queries share
+    the corpus schema: both sides are read through ``id_col`` and
+    ``phash_col``.
 
     Plan: band-explode both sides, the QUERY side broadcast (query sets
     are small by nature), equi-join on (band, val), dropDuplicates on
@@ -1030,11 +1031,11 @@ def phash_topk(
         .dropDuplicates(["qid", "cid"])
     )
     scored = cand.select(
-        F.col("qid").alias(query_id_col),
+        F.col("qid").alias("query_id"),
         F.col("cid").alias(id_col),
         F.bit_count(F.col("qph").bitwiseXOR(F.col("cph"))).cast("long").alias("hamming"),
     )
-    w = Window.partitionBy(query_id_col).orderBy("hamming", id_col)
+    w = Window.partitionBy("query_id").orderBy("hamming", id_col)
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
         .where(F.col("rk") <= k)

@@ -184,8 +184,9 @@ def expire_snapshots_plan(
 
     - ``recent``: one of the newest ``keep_last`` snapshots (by
       (committed_at, id) DESC — id breaks commit-time ties);
-    - ``daily``: the LAST snapshot of its calendar day, for days within
-      ``keep_daily_days`` days of the newest snapshot's day;
+    - ``daily``: the LAST snapshot of its calendar day (same order),
+      for days within ``keep_daily_days`` days of the newest
+      snapshot's day;
     - ``expire``: everything else (safe to remove together with any
       data files only they reference).
 
@@ -200,12 +201,16 @@ def expire_snapshots_plan(
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     if keep_daily_days < 0:
         raise ValueError(f"keep_daily_days must be >= 0, got {keep_daily_days}")
-    day = F.to_date(F.col(ts_col))
     base = snapshots.select(
-        F.col(id_col).alias("snapshot_id"), day.alias("day")
+        F.col(id_col).alias("snapshot_id"),
+        F.to_date(F.col(ts_col)).alias("day"),
+        F.col(ts_col).alias("_ts"),
     )
-    w_recent = Window.orderBy(F.col("day").desc(), F.col("snapshot_id").desc())
-    w_day = Window.partitionBy("day").orderBy(F.col("snapshot_id").desc())
+    # the full commit time orders same-day commits; the id only breaks
+    # exact ties (ids need not follow commit order)
+    newest = (F.col("_ts").desc(), F.col("snapshot_id").desc())
+    w_recent = Window.orderBy(*newest)
+    w_day = Window.partitionBy("day").orderBy(*newest)
     w_all = Window.partitionBy()
     labeled = base.select(
         "snapshot_id",

@@ -6,10 +6,15 @@
       -> tile rollup (explicit repartition by cell prefix, then aggregate)
 
 Single action, no persist, no double-scan: the PIP stage carries full rows
-(`spatial_annotate_broadcast`), so the decode pass runs exactly once and
-the only shuffle in the whole pipeline is the final explicit cell-prefix
-repartition + rollup. This is the benchmark hot path and the flagship
-`entry()` shape (SURVEY.md §2.6; BASELINE.json north_rule).
+(`spatial_annotate_broadcast`), so the decode pass runs exactly once. The
+executed plan crosses into Python three times (decode `MapInPandas`, encode
+`ArrowEvalPython`, PIP `MapInPandas`) and shuffles three times: the
+explicit cell-prefix repartition, then one hash `Exchange` for each level
+of the rollup — the `(tile_id, phash)` pre-aggregate and the `tile_id`
+rollup — because `hashpartitioning(tile_prefix)` satisfies neither
+grouping. The geo side is a `BroadcastExchange`, not a shuffle. This is
+the benchmark hot path and the flagship `entry()` shape (SURVEY.md §2.6;
+BASELINE.json north_rule).
 
 Scale notes (100 TB story): validation + encode + PIP are pure
 projections — they scale with input splits and never shuffle. The geo
@@ -60,7 +65,7 @@ def north_pipeline(
     option existed. A tuple like (12, 8, 4) (max must equal ``level``)
     emits the multi-resolution rollup keyed by (res, cell): the pyramid
     explode is one codegen Generate(stack) riding the same single decode
-    pass and the same one repartition — all levels for one shuffle."""
+    pass and the same three shuffles — no level adds a pass."""
     checked = with_image_checks(images)
     valid = checked.where(
         F.col("decode_ok") & F.col("dims_ok") & F.col("caption_ok")

@@ -8158,36 +8158,9 @@ def spatial_nn_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# The external driver certifies entries under a time/entry budget (stops
-# around 50 of 66), so ordering decides which entries get a fresh official
-# row each round. Ordering is CHANGE-AWARE (fairy_core_spark/gate.py):
-# entries whose implementation fingerprint diverged from the last certified
-# round's snapshot serve first, entries starved from the newest
-# CORRECTNESS_r*.json second, already-green-and-byte-identical entries last
-# — so anything the budget cuts is, by construction, an entry whose exact
-# current bytes already carry a green official row. Pure ordering: names,
-# callables and oracles are unchanged; iteration order is NOT registration
-# order and may shift round-over-round (documented in README).
-_SERVE_ORDER_CACHE: list[str] | None = None
-
-
-def _serve_order() -> list[str]:
-    global _SERVE_ORDER_CACHE
-    if _SERVE_ORDER_CACHE is None:
-        from fairy_core_spark import gate
-
-        try:
-            _SERVE_ORDER_CACHE = gate.serve_order(_QUERIES, _ORACLES)
-        except Exception:  # ordering must never break the registry
-            _SERVE_ORDER_CACHE = list(_QUERIES)
-    return _SERVE_ORDER_CACHE
-
-
 def queries() -> dict[str, QueryFn]:
-    order = _serve_order()
-    return {k: _QUERIES[k] for k in order}
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    order = _serve_order()
-    return {k: _ORACLES[k] for k in order if k in _ORACLES}
+    return dict(_ORACLES)

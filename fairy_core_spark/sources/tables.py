@@ -462,13 +462,17 @@ class VersionedParquetDirCatalog(IcebergLikeCatalog):
         """The ``deleteOrphanFiles`` decision as data: every path under
         the table directory that NO kept snapshot references — version
         dirs dropped by retention (pass the ids ``expire_snapshots_plan``
-        labeled recent/daily), plus stray files a crashed writer left
-        outside any version dir. Catalog metadata (`_snapshot.json`,
-        `_snapshot_log.json`) is never orphaned. Default (``None``)
-        keeps every logged snapshot — then only stray files surface.
-        Metadata-only (one directory walk); the caller deletes, this
-        only plans — same contract as the other maintenance planners.
-        Paths are relative to the table dir, sorted."""
+        labeled recent/daily), stray files a crashed writer left outside
+        any version dir, and non-parquet debris (temp chunks) inside a
+        kept one. A kept dir's ``.parquet`` files are never reported: the
+        catalog keeps no per-file manifest, so a crashed writer's stray
+        ``part-*.parquet`` there is indistinguishable from a member.
+        Catalog metadata (`_snapshot.json`, `_snapshot_log.json`) is
+        never orphaned. Default (``None``) keeps every logged snapshot —
+        then only stray files surface. Metadata-only (one directory
+        walk); the caller deletes, this only plans — same contract as the
+        other maintenance planners. Paths are relative to the table dir,
+        sorted."""
         log = self.history(name)
         if not log:
             raise FileNotFoundError(f"no snapshots for table {name!r}")
@@ -487,10 +491,10 @@ class VersionedParquetDirCatalog(IcebergLikeCatalog):
                 if rel in meta:
                     continue
                 if top in kept_dirs:
-                    # inside a LIVE version dir only the table's actual
-                    # members are referenced — writer debris (temp chunks
-                    # from a crashed attempt) is orphaned even here, the
-                    # file-level semantics real manifest-based cleanup has
+                    # a LIVE version dir has no per-file manifest (files()
+                    # walks it too), so every parquet file in it counts as
+                    # a member: only non-parquet debris is orphaned here,
+                    # a stray part-*.parquet from a crashed writer is not
                     if fn.endswith(".parquet") or fn == "_SUCCESS" or fn.endswith(".crc"):
                         continue
                 out.append(rel)

@@ -577,6 +577,8 @@ def resample_tracks(
     floor-division (the positive-mod adjustment makes the numerator
     exactly divisible before ``div``, so truncation == floor even for
     negative deltas — bit-identical to an engine whose ``//`` floors).
+    The grid bounds floor-align the same way (``t - pmod(t, g)``), so
+    pre-1970 (negative) epochs stay inside (t0, t1].
 
     Gaps longer than ``max_gap_intervals`` grid steps emit NOTHING —
     interpolating across a silence of days is fiction, and the guard
@@ -611,8 +613,8 @@ def resample_tracks(
         .where((F.col("t1") - F.col("t")) <= F.lit(g * max_gap_intervals))
     )
     grid = (
-        nxt.withColumn("gstart", F.expr(f"(t div {g} + 1) * {g}"))
-        .withColumn("gend", F.expr(f"(t1 div {g}) * {g}"))
+        nxt.withColumn("gstart", F.expr(f"t - pmod(t, {g}) + {g}"))
+        .withColumn("gend", F.expr(f"t1 - pmod(t1, {g})"))
         .where(F.col("gstart") <= F.col("gend"))
         .select(
             "ent", "t", "t1", "x0", "y0", "x1", "y1",

@@ -2,7 +2,8 @@
 (fairy_core_spark/goldens/contract_goldens.py): recompute a sample of each
 golden from the live engine and compare. If the sf0.01 fixture, the image
 generator, the S2 encoder, or the phash kernel changes, this fails loudly
-instead of leaving the DuckDB oracle gate to surface an opaque mismatch."""
+instead of leaving the DuckDB oracle gate to surface an opaque mismatch.
+The last test pins the registry those oracles are served from."""
 
 from __future__ import annotations
 
@@ -128,3 +129,14 @@ def test_image_dihedral_golden_matches_engine(spark):
     assert len(rows) > 30
     for r in rows:
         assert golden[r["image_id"]] == r["dkey"], r["image_id"]
+
+
+def test_registry_dicts_complete_and_aligned():
+    """queries()/oracle_sql() serve every registered entry in registration
+    order, and every oracle names a registered query."""
+    from fairy_core_spark.queries import _ORACLES, _QUERIES, oracle_sql, queries
+
+    qs, os_ = queries(), oracle_sql()
+    assert list(qs) == list(_QUERIES)
+    assert list(os_) == list(_ORACLES)
+    assert set(os_) <= set(qs)

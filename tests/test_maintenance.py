@@ -184,6 +184,34 @@ def test_expire_snapshots_plan_reasons(spark):
     assert got[1] == "expire" and got[2] == "expire"
 
 
+def test_expire_snapshots_plan_same_day_orders_by_commit_time(spark):
+    """same-day commits rank by the full commit timestamp, not by id: the
+    newest commit stays recent even when its id sorts lower (commit-10
+    after commit-9), and the day's last commit is the daily keeper."""
+    import datetime as dt
+
+    from fairy_core_spark.operators.maintenance import expire_snapshots_plan
+
+    t = dt.datetime
+    rows = [
+        ("commit-9", t(2024, 3, 1, 9, 0)),
+        ("commit-10", t(2024, 3, 1, 17, 30)),  # newest, lower id string
+        ("commit-8", t(2024, 2, 28, 8, 0)),
+        ("commit-7", t(2024, 2, 28, 20, 0)),   # last of its day
+    ]
+    snaps = spark.createDataFrame(rows, "snapshot_id string, committed_at timestamp")
+    got = {
+        r["snapshot_id"]: r["reason"]
+        for r in expire_snapshots_plan(snaps, keep_last=1, keep_daily_days=30).collect()
+    }
+    assert got == {
+        "commit-10": "recent",
+        "commit-9": "expire",
+        "commit-7": "daily",
+        "commit-8": "expire",
+    }
+
+
 def test_orphan_files_plan(spark, tmp_path):
     """deleteOrphanFiles analog: version dirs outside the kept snapshot
     set + stray writer debris surface; kept dirs and catalog metadata
@@ -202,15 +230,22 @@ def test_orphan_files_plan(spark, tmp_path):
     stray.write_text("junk")
     top_stray = tmp_path / "t" / "leftover.tmp"
     top_stray.write_text("junk")
+    live_stray = tmp_path / "t" / "data-v2" / "part-00000.parquet.tmp"
+    live_stray.write_text("junk")
 
     # keep only the newest snapshot: v0 + v1 files orphan, incl. the stray
     got = cat.orphan_files("t", {s2["snapshot_id"]})
     assert "leftover.tmp" in got
     assert any(p.startswith("data-v0/") for p in got)
     assert any(p == "data-v1/_temporary_chunk" for p in got)
-    assert not any(p.startswith("data-v2/") for p in got)
+    # the kept dir reports its non-parquet debris, never its members
+    assert [p for p in got if p.startswith("data-v2/")] == [
+        "data-v2/part-00000.parquet.tmp"
+    ]
     assert not any(p.endswith("_snapshot.json") for p in got)
 
     # default: all logged snapshots kept -> only true strays
     got_all = cat.orphan_files("t")
-    assert got_all == ["data-v1/_temporary_chunk", "leftover.tmp"]
+    assert got_all == [
+        "data-v1/_temporary_chunk", "data-v2/part-00000.parquet.tmp", "leftover.tmp"
+    ]

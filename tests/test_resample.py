@@ -75,3 +75,24 @@ def test_equal_timestamps_skip_pair(spark):
         nx = (100 - 999) * (gt - (base + 500_000))
         want.append(("u", gt, 999 + nx // den, 0))
     assert got == sorted(want)
+
+
+def test_pre_1970_grid_stays_inside_pair(spark):
+    """negative epochs: grid bounds floor-align, so every emitted instant
+    lies in (t0, t1] — truncating division would start one step late and
+    end one step past t1."""
+    from fairy_core_spark.spatial.trajectory import resample_tracks
+
+    pings = [(-3_500_000, 1, 0), (-500_000, 2, 300), (1_250_000, 3, 300)]
+    df = spark.createDataFrame(pings, "us long, event_id long, px long").select(
+        F.lit("u").alias("user_id"),
+        F.timestamp_micros("us").alias("ts"),
+        "event_id",
+        "px",
+        F.lit(0).cast("long").alias("py"),
+    )
+    out = resample_tracks(df, interval_us=G).collect()
+    got = sorted((r["grid_us"], r["px"]) for r in out)
+    # pair (-3.5s, -0.5s] holds -3s, -2s, -1s (x = 300 * (gt - t0) / 3s);
+    # pair (-0.5s, 1.25s] holds 0 and 1s
+    assert got == [(-3 * G, 50), (-2 * G, 150), (-1 * G, 250), (0, 300), (G, 300)]
