@@ -108,19 +108,16 @@ def decode_png(data: bytes) -> np.ndarray:
     if raw.size != h * (1 + w * 3):
         raise ValueError("bad PNG payload size")
     rows = raw.reshape(h, 1 + w * 3)
-    out = np.empty((h, w * 3), dtype=np.uint8)
-    prev = np.zeros(w * 3, dtype=np.uint8)
-    for y in range(h):  # per-row loop (h <= a few hundred); unfilter
-        f = rows[y, 0]
-        cur = rows[y, 1:].copy()
-        if f == 0:
-            pass
-        elif f == 2:  # Up
-            cur = (cur.astype(np.int16) + prev).astype(np.uint8)
-        else:
-            raise ValueError(f"unsupported PNG filter {f}")
-        out[y] = cur
-        prev = out[y]
+    filters = rows[:, 0]
+    bad = filters[(filters != 0) & (filters != 2)]
+    if bad.size:
+        raise ValueError(f"unsupported PNG filter {bad[0]}")
+    # one slice copy: None (0) rows are final as stored; each Up (2) row
+    # then adds the unfiltered row above it (uint8 wraps mod 256), top down
+    out = rows[:, 1:].copy()
+    for y in np.flatnonzero(filters == 2):
+        if y:
+            out[y] += out[y - 1]
     return out.reshape(h, w, 3)
 
 

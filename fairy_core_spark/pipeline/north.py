@@ -8,13 +8,12 @@
 Single action, no persist, no double-scan: the PIP stage carries full rows
 (`spatial_annotate_broadcast`), so the decode pass runs exactly once. The
 executed plan crosses into Python three times (decode `MapInPandas`, encode
-`ArrowEvalPython`, PIP `MapInPandas`) and shuffles three times: the
-explicit cell-prefix repartition, then one hash `Exchange` for each level
-of the rollup — the `(tile_id, phash)` pre-aggregate and the `tile_id`
-rollup — because `hashpartitioning(tile_prefix)` satisfies neither
-grouping. The geo side is a `BroadcastExchange`, not a shuffle. This is
-the benchmark hot path and the flagship `entry()` shape (SURVEY.md §2.6;
-BASELINE.json north_rule).
+`ArrowEvalPython`, PIP `MapInPandas`) and shuffles once: the explicit
+cell-prefix repartition. Both levels of the rollup group by
+`(tile_prefix, tile_id, ...)`, so `hashpartitioning(tile_prefix)`
+satisfies them and they add no `Exchange`. The geo side is a
+`BroadcastExchange`, not a shuffle. This is the benchmark hot path and
+the flagship `entry()` shape (SURVEY.md §2.6; BASELINE.json north_rule).
 
 Scale notes (100 TB story): validation + encode + PIP are pure
 projections — they scale with input splits and never shuffle. The geo
@@ -65,7 +64,9 @@ def north_pipeline(
     option existed. A tuple like (12, 8, 4) (max must equal ``level``)
     emits the multi-resolution rollup keyed by (res, cell): the pyramid
     explode is one codegen Generate(stack) riding the same single decode
-    pass and the same three shuffles — no level adds a pass."""
+    pass — no level adds a pass. Its rollup keeps its own two hash
+    Exchanges (three shuffles in all), because a coarse cell can span two
+    cell prefixes."""
     checked = with_image_checks(images)
     valid = checked.where(
         F.col("decode_ok") & F.col("dims_ok") & F.col("caption_ok")

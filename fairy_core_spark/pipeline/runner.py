@@ -12,6 +12,11 @@ its recorded input fingerprints and stage version match — so a killed job
 resumes after the last completed stage with byte-identical outputs
 (SURVEY.md §5 item 4 resume test).
 
+The skip decision needs only catalog snapshot metadata (a JSON read), so
+a stage's inputs are read only when it runs, and the lineage JSONL files
+are mirrored to parquet on the driver with pyarrow: a re-submit that
+skips every stage runs no Spark job.
+
 The flagship pipeline (validate -> encode -> spatial-join -> tile) is
 assembled in ``image_pipeline`` and submitted via::
 
@@ -44,6 +49,25 @@ class Stage:
     version: str = "1"  # bump to force recompute on logic changes
 
 
+def _json_inferred_shape(arr):
+    """``arr`` in the shape ``spark.read.json`` infers for the same JSON:
+    struct fields sorted by name at every depth (pyarrow documents no
+    field order for inferred structs), and a struct with no fields
+    dropped (None), as Spark drops an object that is empty in every row."""
+    import pyarrow as pa
+
+    if not pa.types.is_struct(arr.type):
+        return arr
+    kept = {}
+    for name in sorted(f.name for f in arr.type):
+        child = _json_inferred_shape(arr.field(name))
+        if child is not None:
+            kept[name] = child
+    if not kept:
+        return None
+    return pa.StructArray.from_arrays(list(kept.values()), names=list(kept), mask=arr.is_null())
+
+
 class PipelineRunner:
     def __init__(self, spark: SparkSession, out_dir: str, catalog: ParquetDirCatalog | None = None):
         self.spark = spark
@@ -65,6 +89,34 @@ class PipelineRunner:
     def _append(self, path: str, row: dict) -> None:
         with open(path, "a") as f:
             f.write(canonical_json(row) + "\n")
+
+    def _write_mirror(self, jsonl_path: str, table: str) -> None:
+        """Rewrite ``out_dir/<table>/`` as one parquet file holding every
+        row of ``jsonl_path``, with the schema ``spark.read.json`` infers
+        from it. Driver-side, no Spark job. The new file is written under
+        a hidden name, the directory's other entries (an earlier mirror,
+        or ``part-*`` files a Spark writer left there) are removed, and
+        only then is the file renamed into view, so the directory never
+        yields a row twice."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if not os.path.exists(jsonl_path):
+            return
+        with open(jsonl_path) as f:
+            # json + pa.array rather than pyarrow.json: Python type
+            # inference keeps every string a string, as spark.read.json
+            # does; pyarrow.json would turn ISO-looking ones into timestamps
+            rows = [json.loads(line) for line in f]
+        data = pa.Table.from_struct_array(_json_inferred_shape(pa.array(rows)))
+        d = os.path.join(self.out_dir, table)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, ".mirror.parquet.tmp")
+        pq.write_table(data, tmp)
+        for fn in os.listdir(d):
+            if fn != os.path.basename(tmp):
+                os.remove(os.path.join(d, fn))
+        os.replace(tmp, os.path.join(d, "part-0.parquet"))
 
     def _stage_fingerprint(self, stage: Stage, input_snaps: dict[str, str]) -> str:
         payload = {"stage": stage.name, "version": stage.version, "inputs": input_snaps}
@@ -151,21 +203,17 @@ class PipelineRunner:
         status: dict[str, str] = {}
         for stage in stages:
             input_snaps: dict[str, str] = {}
-            frames: dict[str, DataFrame] = {}
             for name in stage.inputs:
-                if name in sources:
-                    frames[name] = sources[name]
-                    if name in source_snaps:
-                        input_snaps[name] = f"source:{name}:{source_snaps[name]}"
-                    else:
-                        # content-blind: unique per run -> never skips
-                        # (plan hashes are NOT stable across processes —
-                        # semanticHash embeds per-session ids — so there is
-                        # no cheap content-true fingerprint to take here)
-                        input_snaps[name] = f"source:{name}:volatile-{os.urandom(8).hex()}"
-                else:
-                    frames[name] = self.catalog.read(self.spark, name)
+                if name not in sources:
                     input_snaps[name] = self.catalog.snapshot(name)["snapshot_id"]
+                elif name in source_snaps:
+                    input_snaps[name] = f"source:{name}:{source_snaps[name]}"
+                else:
+                    # content-blind: unique per run -> never skips
+                    # (plan hashes are NOT stable across processes —
+                    # semanticHash embeds per-session ids — so there is
+                    # no cheap content-true fingerprint to take here)
+                    input_snaps[name] = f"source:{name}:volatile-{os.urandom(8).hex()}"
             fp = self._stage_fingerprint(stage, input_snaps)
 
             if self.catalog.exists(stage.output) and self._completed_fingerprint(stage) == fp:
@@ -178,6 +226,10 @@ class PipelineRunner:
 
             t0 = time.monotonic()
             self._invalidate_marker(stage)  # crash mid-write must not leave a valid marker
+            frames = {
+                name: sources[name] if name in sources else self.catalog.read(self.spark, name)
+                for name in stage.inputs
+            }
             out_df = stage.transform(self.spark, frames)
             snap = self.catalog.write(out_df, stage.output, partition_by=stage.partition_by)
             wall_ms = int((time.monotonic() - t0) * 1000)
@@ -206,16 +258,8 @@ class PipelineRunner:
                 self._metrics_path,
                 {"stage": stage.name, "rows_out": rows_out, "wall_ms": wall_ms},
             )
-        # lineage mirrors as queryable parquet tables
-        if os.path.exists(self._lineage_path):
-            lineage_df = self.spark.read.json(self._lineage_path)
-            lineage_df.write.mode("overwrite").parquet(
-                os.path.join(self.out_dir, "lineage_table")
-            )
-        if os.path.exists(self._partition_lineage_path):
-            self.spark.read.json(self._partition_lineage_path).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self.out_dir, "lineage_partitions_table"))
+        self._write_mirror(self._lineage_path, "lineage_table")
+        self._write_mirror(self._partition_lineage_path, "lineage_partitions_table")
         return status
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from fairy_core_spark.functions.geometry import BBoxGridIndex, STRtree, haversine_m
+from fairy_core_spark.functions.geometry import EARTH_RADIUS_M, BBoxGridIndex, STRtree, haversine_m
 from fairy_core_spark.spatial import s2
 
 TILE_LEVEL = 12  # H3 res-7 equivalent (avg cell area ~5.1 km^2)
@@ -269,22 +269,30 @@ def tile_aggregates_annotated(
     Exact distinct WITHOUT countDistinct: a single multi-countDistinct
     rollup plans an Expand (rows x distinct-aggs) and an HLL sketch per
     group is worse here (tiles hold ~1-3 images, sketches are KBs). The
-    scalable exact pattern is two-level: pre-aggregate by (keys, phash) —
-    map-side combine collapses dup hashes before the shuffle — then roll
-    tiles up from partial sums. Every stage is partial-aggregable."""
-    lvl1 = tiled.groupBy(*keys, "phash").agg(
+    scalable exact pattern is two-level: pre-aggregate by (keys, phash),
+    which collapses dup hashes, then roll tiles up from partial sums.
+    Every stage is partial-aggregable.
+
+    On the one-level path both groupings lead with ``tile_prefix`` (a
+    function of ``tile_id``, so the groups are the same) and drop it at
+    the end: the rows' ``hashpartitioning(tile_prefix)`` then satisfies
+    both aggregates, and they add no shuffle. The pyramid path keeps
+    (res, cell), because a coarse cell can span two prefixes."""
+    group = ("tile_prefix", *keys) if keys == ("tile_id",) else keys
+    lvl1 = tiled.groupBy(*group, "phash").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("w").alias("sw"),
         F.sum("h").alias("sh"),
         F.sum(F.size("polygon_ids")).alias("sp"),
     )
-    return lvl1.groupBy(*keys).agg(
+    rollup = lvl1.groupBy(*group).agg(
         F.sum("cnt").alias("n_images"),
         F.round(F.sum("sw") / F.sum("cnt"), 4).alias("avg_w"),
         F.round(F.sum("sh") / F.sum("cnt"), 4).alias("avg_h"),
         (F.sum("cnt") - F.count(F.lit(1))).alias("n_phash_dups"),
         F.sum("sp").alias("n_pip_matches"),
     )
+    return rollup.drop("tile_prefix")
 
 
 def spatial_join_cells(
@@ -367,7 +375,7 @@ def radius_join(
     points in 9 cells — the bin-bounded 2-D analogue of
     operators/joins.interval_join_binned. Output: (query_id, neighbor_id,
     distance_m), self-pairs included if present in both sides."""
-    import math
+    from fairy_core_spark.spatial.trajectory import haversine_m as haversine_col
 
     if level is None:
         # largest level whose min cell width still covers the radius:
@@ -412,7 +420,11 @@ def radius_join(
         .select("qid", "qlat", "qlon", F.explode("cells").alias("cell"))
         .join(pts, "cell")
     )
-    dist = haversine_udf()(F.col("qlat"), F.col("qlon"), F.col("nlat"), F.col("nlon"))
+    # native refine, no Python crossing: functions/geometry.haversine_m's
+    # formula on its sphere; only the last ulp can differ from the numpy one
+    dist = haversine_col(
+        F.col("qlat"), F.col("qlon"), F.col("nlat"), F.col("nlon"), radius_m=EARTH_RADIUS_M
+    )
     return (
         cand.withColumn("distance_m", dist)
         .where(F.col("distance_m") <= float(radius_m))
@@ -658,12 +670,19 @@ def tile_assign(
 
 
 def tile_aggregates(tiled: DataFrame) -> DataFrame:
-    """per-tile rollup (count, mean dims, dup count by phash)."""
-    return tiled.groupBy("tile_id").agg(
-        F.count(F.lit(1)).alias("n_images"),
-        F.round(F.avg("w"), 4).alias("avg_w"),
-        F.round(F.avg("h"), 4).alias("avg_h"),
-        (F.count(F.lit(1)) - F.countDistinct("phash")).alias("n_phash_dups"),
+    """per-tile rollup (count, mean dims, dup count by phash) over rows
+    repartitioned by ``tile_prefix`` (``tile_assign``). Grouping leads
+    with ``tile_prefix``, a function of ``tile_id``, so that partitioning
+    satisfies every aggregate and the rollup adds no shuffle."""
+    return (
+        tiled.groupBy("tile_prefix", "tile_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_images"),
+            F.round(F.avg("w"), 4).alias("avg_w"),
+            F.round(F.avg("h"), 4).alias("avg_h"),
+            (F.count(F.lit(1)) - F.countDistinct("phash")).alias("n_phash_dups"),
+        )
+        .drop("tile_prefix")
     )
 
 

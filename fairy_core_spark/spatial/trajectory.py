@@ -33,18 +33,18 @@ R_EARTH_M = 6371008.8
 
 
 def haversine_m(
-    lat1: Column, lon1: Column, lat2: Column, lon2: Column
+    lat1: Column, lon1: Column, lat2: Column, lon2: Column, radius_m: float = R_EARTH_M
 ) -> Column:
-    """Great-circle distance in meters (double) — the published haversine
-    formula, sqrt argument clamped to [0, 1] against rounding overshoot
-    at antipodes."""
+    """Great-circle distance in meters (double) on a sphere of ``radius_m``
+    — the published haversine formula, sqrt argument clamped to [0, 1]
+    against rounding overshoot at antipodes."""
     d2r = F.lit(_DEG2RAD)
     p1, p2 = lat1 * d2r, lat2 * d2r
     sdphi = F.sin((lat2 - lat1) * d2r / F.lit(2.0))
     sdlmb = F.sin((lon2 - lon1) * d2r / F.lit(2.0))
     a = sdphi * sdphi + F.cos(p1) * F.cos(p2) * sdlmb * sdlmb
     return (
-        F.lit(2.0 * R_EARTH_M)
+        F.lit(2.0 * radius_m)
         * F.asin(F.sqrt(F.least(F.greatest(a, F.lit(0.0)), F.lit(1.0))))
     )
 

@@ -201,3 +201,55 @@ def test_caption_phash_consistency_planted(spark):
     assert ("phash", "5") not in got and ("caption", "unique") not in got
     assert ("phash", "3") not in got  # singleton phash groups absent
     assert len(got) == 4
+
+
+def _png_with_filters(pixels: np.ndarray, filters: list[int]) -> bytes:
+    """A PNG of ``pixels`` whose row y carries filter byte filters[y]: Up
+    (2) rows store the byte difference to the row above, others store the
+    row as is."""
+    import struct
+    import zlib
+
+    from fairy_core_spark.functions.image_codec import _PNG_SIG, _chunk
+
+    h, w, _ = pixels.shape
+    flat = pixels.reshape(h, w * 3)
+    above = np.vstack([np.zeros((1, w * 3), dtype=np.uint8), flat[:-1]])
+    rows = np.zeros((h, 1 + w * 3), dtype=np.uint8)
+    rows[:, 0] = filters
+    rows[:, 1:] = np.where(np.array(filters)[:, None] == 2, flat - above, flat)
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    idat = zlib.compress(rows.tobytes(), 6)
+    return _PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
+
+
+def test_png_up_filter_round_trips_and_unknown_filter_fails_decode(spark):
+    """Up-filtered rows (first row, a run of them, one after a None row)
+    decode to the original pixels, through the codec and through
+    with_image_checks; an unsupported filter byte (3, Average) fails only
+    its own row's decode_ok."""
+    row = synth_image_row(7)
+    w, h = row["w"], row["h"]
+    pixels = decode_image(bytes(row["bytes"]), row["fmt"])
+    filters = [2, 2, 2, 0, 2] + [0, 2] * (h // 2)
+    filters = filters[:h]
+    assert filters.count(2) >= 3
+    up_png = _png_with_filters(pixels, filters)
+    assert np.array_equal(decode_image(up_png, "png"), pixels)
+
+    bad_png = _png_with_filters(pixels, [0, 3] + [0] * (h - 2))
+    with pytest.raises(ValueError, match="unsupported PNG filter 3"):
+        decode_image(bad_png, "png")
+
+    base = {k: row[k] for k in ("w", "h", "caption", "phash")}
+    rows = [
+        {**base, "image_id": "up", "bytes": bytearray(up_png), "fmt": "png"},
+        {**base, "image_id": "avg", "bytes": bytearray(bad_png), "fmt": "png"},
+    ]
+    schema = images_df(spark, 1).schema
+    df = spark.createDataFrame([tuple(r[f] for f in schema.names) for r in rows], schema)
+    got = {
+        r["image_id"]: (r["decode_ok"], r["phash_ok"])
+        for r in with_image_checks(df, reference_pixels=lambda *_: None).collect()
+    }
+    assert got == {"up": (True, True), "avg": (False, False)}

@@ -51,9 +51,9 @@ CLAIMS = [
     ("agg_rollup_nation", 1, 0, ("Expand", "BroadcastHashJoin")),
     # broadcast point-in-polygon: one Python pass, zero shuffle
     ("spatial_pip_join", 0, 1, ("MapInPandas",)),
-    # cell-cover equi-join + refine: no cross join, no shuffle; the
-    # encode, ring and refine kernels are five Arrow crossings
-    ("spatial_radius_join", 0, 5, ("BroadcastHashJoin", "ArrowEvalPython")),
+    # cell-cover equi-join + native haversine refine: no cross join, no
+    # shuffle; the encode and ring kernels are four Arrow crossings
+    ("spatial_radius_join", 0, 4, ("BroadcastHashJoin", "ArrowEvalPython")),
     # one Arrow encode feeding one window shuffle with a partial top-1
     ("spatial_quota_per_cell", 1, 1, ("ArrowEvalPython", "WindowGroupLimit")),
     # broadcast sites into a nested loop; points never shuffle against
@@ -64,15 +64,46 @@ CLAIMS = [
 ]
 
 
+def _shape(df):
+    """(shuffle Exchanges, Python nodes, plan text) of ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = _NODE.findall(plan)
+    return nodes.count("Exchange"), sum(1 for n in nodes if _PYTHON.fullmatch(n)), plan
+
+
 @pytest.mark.parametrize(
     "name,shuffles,python,required", CLAIMS, ids=[c[0] for c in CLAIMS]
 )
 def test_plan_shape(spark, name, shuffles, python, required):
-    df = queries()[name](spark, SF0001)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    nodes = _NODE.findall(plan)
-    assert nodes.count("Exchange") == shuffles, plan
-    assert sum(1 for n in nodes if _PYTHON.fullmatch(n)) == python, plan
+    n_shuffles, n_python, plan = _shape(queries()[name](spark, SF0001))
+    assert n_shuffles == shuffles, plan
+    assert n_python == python, plan
     for text in required:
         assert text in plan, (text, plan)
     assert "CartesianProduct" not in plan, plan
+
+
+def test_tile_rollups_shuffle_once(spark, tmp_path):
+    """Both tile rollups group by (tile_prefix, tile_id, ...), so the
+    cell-prefix repartition is their only shuffle: ``north_pipeline`` has
+    one hash Exchange and three Python crossings (decode, encode, PIP),
+    and the runner's ``tile`` stage one Exchange."""
+    from fairy_core_spark.datagen.images import geo_df, images_df, polygons_pdf
+    from fairy_core_spark.pipeline.north import north_pipeline
+    from fairy_core_spark.pipeline.runner import image_pipeline_stages
+
+    # parquet inputs, as in the benchmark: the generators are Python nodes
+    images_df(spark, 64).write.parquet(str(tmp_path / "images"))
+    geo_df(spark, 64).write.parquet(str(tmp_path / "geo"))
+    images = spark.read.parquet(str(tmp_path / "images"))
+    geo = spark.read.parquet(str(tmp_path / "geo"))
+    north = north_pipeline(images, geo, polygons_pdf(4))
+    n_shuffles, n_python, plan = _shape(north)
+    assert (n_shuffles, n_python) == (1, 3), plan
+
+    tile = next(s for s in image_pipeline_stages(64) if s.name == "tile")
+    encoded = spark.createDataFrame(
+        [(1, 5 << 52, 64, 48, 7)], "image_id long, cell long, w int, h int, phash long"
+    )
+    n_shuffles, n_python, plan = _shape(tile.transform(spark, {"encoded": encoded}))
+    assert (n_shuffles, n_python) == (1, 0), plan
