@@ -262,16 +262,6 @@ def polygons_pdf(n: int = 100) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def polygons_df(spark: SparkSession, n: int = 100) -> DataFrame:
-    schema = "polygon_id string, ring array<struct<lat:double, lon:double>>"
-    pdf = polygons_pdf(n)
-    rows = [
-        (r["polygon_id"], [(pt["lat"], pt["lon"]) for pt in r["ring"]])
-        for _, r in pdf.iterrows()
-    ]
-    return spark.createDataFrame(rows, schema=schema)
-
-
 def low_info_images_df(
     spark: SparkSession, n_solid: int = 12, n_spike: int = 4
 ) -> DataFrame:

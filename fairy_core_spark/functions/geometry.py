@@ -1,9 +1,9 @@
 """Planar/spherical geometry kernels, pure numpy (north-rule ops).
 
 - ray-casting point-in-polygon (even-odd rule) over lat/lon rings;
-- a packed bbox grid index ("R-tree lite": STR-style bulk-loaded uniform
-  grid over polygon bboxes) that serializes to plain numpy arrays — cheap
-  to broadcast to every executor and query vectorized;
+- an STR-packed R-tree over polygon bboxes (``STRtree``), the one polygon
+  index: it serializes to plain numpy arrays — cheap to broadcast to every
+  executor — and is queried vectorized;
 - haversine distance.
 
 Conventions: polygons are closed rings [(lat, lon), ...] (first==last
@@ -49,114 +49,6 @@ def point_in_ring(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray) -> np.ndar
     return inside
 
 
-def _rings_to_boxes(rings: list[np.ndarray]) -> np.ndarray:
-    """(n, 4) [lat_min, lat_max, lon_min, lon_max] bbox per ring — shared
-    by both polygon indexes so their bbox semantics cannot diverge. The
-    reshape keeps shape (0, 4) when n == 0 (np.array([]) is 1-D)."""
-    return np.array(
-        [[r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()] for r in rings],
-        dtype=np.float64,
-    ).reshape(-1, 4)
-
-
-def _refine_candidates(
-    lat: np.ndarray,
-    lon: np.ndarray,
-    cand: list[tuple[int, int]],
-    rings: list[np.ndarray],
-    ids: list[str],
-) -> list[tuple[int, str]]:
-    """Exact ray-cast refine of (point_index, polygon_index) candidate
-    pairs, grouped per polygon — the one refine implementation behind both
-    indexes (identical output by construction, as their docstrings
-    promise)."""
-    if not cand:
-        return []
-    ci = np.fromiter((i for i, _ in cand), dtype=np.int64, count=len(cand))
-    cp = np.fromiter((p for _, p in cand), dtype=np.int64, count=len(cand))
-    out: list[tuple[int, str]] = []
-    for pi in np.unique(cp):
-        idx = ci[cp == pi]
-        hit = point_in_ring(lat[idx], lon[idx], rings[pi])
-        for t in idx[hit]:
-            out.append((int(t), ids[pi]))
-    return out
-
-
-class BBoxGridIndex:
-    """Uniform grid over polygon bounding boxes. Bulk-loaded once on the
-    driver, broadcast as plain arrays; query returns candidate polygon ids
-    for a batch of points (vectorized)."""
-
-    def __init__(self, polygons: dict[str, np.ndarray], nx: int = 64, ny: int = 32):
-        self.ids = list(polygons.keys())
-        self.rings = [np.asarray(polygons[p], dtype=np.float64) for p in self.ids]
-        boxes = _rings_to_boxes(self.rings)
-        self.boxes = boxes
-        self.nx, self.ny = nx, ny
-        self.lat0, self.lat1 = -90.0, 90.0
-        self.lon0, self.lon1 = -180.0, 180.0
-        # cell -> list of polygon indices (python lists; tiny)
-        self.grid: dict[tuple[int, int], list[int]] = {}
-        for pi in range(len(boxes)):
-            x0, x1 = self._xcell(boxes[pi, 2]), self._xcell(boxes[pi, 3])
-            y0, y1 = self._ycell(boxes[pi, 0]), self._ycell(boxes[pi, 1])
-            for cx in range(x0, x1 + 1):
-                for cy in range(y0, y1 + 1):
-                    self.grid.setdefault((cx, cy), []).append(pi)
-
-    def _xcell(self, lon: float) -> int:
-        return int(np.clip((lon - self.lon0) / (self.lon1 - self.lon0) * self.nx, 0, self.nx - 1))
-
-    def _ycell(self, lat: float) -> int:
-        return int(np.clip((lat - self.lat0) / (self.lat1 - self.lat0) * self.ny, 0, self.ny - 1))
-
-    def query_batch(self, lat: np.ndarray, lon: np.ndarray) -> list[tuple[int, int]]:
-        """(point_index, polygon_index) candidate pairs after grid + bbox
-        filter; exact PIP refine is the caller's job."""
-        lat = np.asarray(lat, dtype=np.float64)
-        lon = np.asarray(lon, dtype=np.float64)
-        cx = np.clip(((lon - self.lon0) / (self.lon1 - self.lon0) * self.nx).astype(int), 0, self.nx - 1)
-        cy = np.clip(((lat - self.lat0) / (self.lat1 - self.lat0) * self.ny).astype(int), 0, self.ny - 1)
-        out: list[tuple[int, int]] = []
-        for i in range(len(lat)):
-            for pi in self.grid.get((int(cx[i]), int(cy[i])), ()):
-                b = self.boxes[pi]
-                if b[0] <= lat[i] <= b[1] and b[2] <= lon[i] <= b[3]:
-                    out.append((i, pi))
-        return out
-
-    def contains_batch(self, lat: np.ndarray, lon: np.ndarray) -> list[tuple[int, str]]:
-        """(point_index, polygon_id) exact containment pairs.
-
-        Dense path for small polygon sets: one vectorized n x m bbox mask
-        (no per-point Python), then exact ray cast per polygon on its
-        bbox-passing subset. Falls back to the grid for large m."""
-        lat = np.asarray(lat, dtype=np.float64)
-        lon = np.asarray(lon, dtype=np.float64)
-        out: list[tuple[int, str]] = []
-        if len(self.boxes) <= 512:
-            b = self.boxes
-            inb = (
-                (lat[:, None] >= b[None, :, 0])
-                & (lat[:, None] <= b[None, :, 1])
-                & (lon[:, None] >= b[None, :, 2])
-                & (lon[:, None] <= b[None, :, 3])
-            )
-            for pi in range(len(b)):
-                idx = np.nonzero(inb[:, pi])[0]
-                if len(idx) == 0:
-                    continue
-                hit = point_in_ring(lat[idx], lon[idx], self.rings[pi])
-                for t in idx[hit]:
-                    out.append((int(t), self.ids[pi]))
-            return out
-        out.extend(
-            _refine_candidates(lat, lon, self.query_batch(lat, lon), self.rings, self.ids)
-        )
-        return out
-
-
 class STRtree:
     """STR-packed (Sort-Tile-Recursive) R-tree over polygon bounding boxes
     — the north rule's "broadcast R-tree polygon index" taken literally.
@@ -173,16 +65,20 @@ class STRtree:
 
     Query is frontier-vectorized: a (point, node) frontier descends one
     level per step via ``np.repeat`` over child counts; no per-point
-    Python loop. For the small-m fixture sets this matches the dense
-    bbox path; its value is m in the 10^4-10^6 range where the grid's
-    cell lists skew (coastal polygon pileups) while the R-tree stays
-    balanced by construction.
+    Python loop. The tree stays balanced by construction, so clustered
+    polygon sets (coastal pileups, admin boundaries crowding into
+    cities) cost no more per candidate than uniform ones.
     """
 
     def __init__(self, polygons: dict[str, np.ndarray], fanout: int = 16):
         self.ids = list(polygons.keys())
         self.rings = [np.asarray(polygons[p], dtype=np.float64) for p in self.ids]
-        boxes = _rings_to_boxes(self.rings)
+        # (n, 4) [lat_min, lat_max, lon_min, lon_max]; the reshape keeps
+        # shape (0, 4) when n == 0 (np.array([]) is 1-D)
+        boxes = np.array(
+            [[r[:, 0].min(), r[:, 0].max(), r[:, 1].min(), r[:, 1].max()] for r in self.rings],
+            dtype=np.float64,
+        ).reshape(-1, 4)
         self.boxes = boxes
         self.fanout = int(fanout)
         # leaf_order[i] = polygon index of the i-th packed leaf entry
@@ -221,50 +117,55 @@ class STRtree:
             out.append(strip[np.argsort(cy[strip], kind="stable")])
         return np.concatenate(out)
 
-    def query_batch(self, lat: np.ndarray, lon: np.ndarray) -> list[tuple[int, int]]:
-        """(point_index, polygon_index) pairs whose bbox contains the
-        point; exact PIP refine is the caller's job."""
+    def query_batch(self, lat: np.ndarray, lon: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(point_index, polygon_index) int arrays: the candidate pairs
+        whose polygon bbox contains the point; exact PIP refine is the
+        caller's job."""
         lat = np.asarray(lat, dtype=np.float64)
         lon = np.asarray(lon, dtype=np.float64)
-        n = len(lat)
-        if n == 0 or len(self.boxes) == 0:
-            return []
-        if not self.levels:  # single polygon: root IS the one leaf entry
-            pts = np.arange(n)
-            nodes = np.zeros(n, dtype=np.int64)
-        else:
-            # frontier: every point starts at the root (node 0 of levels[0])
-            pts = np.arange(n)
-            nodes = np.zeros(n, dtype=np.int64)
-            for li, (nb, cs, ce) in enumerate(self.levels):
-                hit = (
-                    (lat[pts] >= nb[nodes, 0]) & (lat[pts] <= nb[nodes, 1])
-                    & (lon[pts] >= nb[nodes, 2]) & (lon[pts] <= nb[nodes, 3])
-                )
-                pts, nodes = pts[hit], nodes[hit]
-                if len(pts) == 0:
-                    return []
-                counts = ce[nodes] - cs[nodes]
-                starts = cs[nodes]
-                pts = np.repeat(pts, counts)
-                # children are contiguous [start, end): start + local offset,
-                # offsets built without a Python loop
-                total = int(counts.sum())
-                offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-                nodes = np.repeat(starts, counts) + offs
+        none = np.empty(0, dtype=np.int64)
+        if len(lat) == 0 or len(self.boxes) == 0:
+            return none, none
+        # frontier: every point starts at the root (node 0 of levels[0]);
+        # a single polygon has no levels — its root IS the one leaf entry
+        pts = np.arange(len(lat))
+        nodes = np.zeros(len(lat), dtype=np.int64)
+        for nb, cs, ce in self.levels:
+            hit = (
+                (lat[pts] >= nb[nodes, 0]) & (lat[pts] <= nb[nodes, 1])
+                & (lon[pts] >= nb[nodes, 2]) & (lon[pts] <= nb[nodes, 3])
+            )
+            pts, nodes = pts[hit], nodes[hit]
+            if len(pts) == 0:
+                return none, none
+            counts = ce[nodes] - cs[nodes]
+            starts = cs[nodes]
+            pts = np.repeat(pts, counts)
+            # children are contiguous [start, end): start + local offset,
+            # offsets built without a Python loop
+            total = int(counts.sum())
+            offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
+            nodes = np.repeat(starts, counts) + offs
         # nodes now index packed LEAF entries; test the entry bboxes
         poly = self.leaf_order[nodes]
         b = self.boxes[poly]
         hit = (lat[pts] >= b[:, 0]) & (lat[pts] <= b[:, 1]) & (lon[pts] >= b[:, 2]) & (lon[pts] <= b[:, 3])
-        return list(zip(pts[hit].tolist(), poly[hit].tolist()))
+        return pts[hit], poly[hit]
 
     def contains_batch(self, lat: np.ndarray, lon: np.ndarray) -> list[tuple[int, str]]:
         """(point_index, polygon_id) exact containment pairs: R-tree
-        candidates, then the ray-cast refine grouped per polygon (same
-        refine as BBoxGridIndex — identical output by construction)."""
+        candidates, then the ray cast grouped per polygon. Polygons are
+        visited in ascending index order, so each point's pairs come out
+        in polygon-index order."""
         lat = np.asarray(lat, dtype=np.float64)
         lon = np.asarray(lon, dtype=np.float64)
-        return _refine_candidates(lat, lon, self.query_batch(lat, lon), self.rings, self.ids)
+        ci, cp = self.query_batch(lat, lon)
+        out: list[tuple[int, str]] = []
+        for pi in np.unique(cp):
+            idx = ci[cp == pi]
+            hit = point_in_ring(lat[idx], lon[idx], self.rings[pi])
+            out.extend((t, self.ids[pi]) for t in idx[hit].tolist())
+        return out
 
 
 def polygon_covering_cells(ring: np.ndarray, level: int) -> np.ndarray:

@@ -6,8 +6,8 @@ median(block). This module is the engine's *definition* of phash: the data
 generator, the integrity rule (recompute-vs-stored) and the dedup operators
 all share it.
 
-Everything is batched: ``phash_batch`` hashes N images with two matrix
-multiplies per image size group — no per-pixel Python.
+Everything is batched: ``phash64_stack`` hashes a stack of N same-sized
+images with two broadcast matrix multiplies — no per-pixel Python.
 """
 
 from __future__ import annotations
@@ -90,41 +90,11 @@ def phash64_stack(stack: np.ndarray) -> np.ndarray:
     return u.sum(axis=1).view(np.int64) if len(g) else np.zeros(0, np.int64)
 
 
-def phash_batch(images: list[np.ndarray | None]) -> np.ndarray:
-    """Hash a batch; None (undecodable) -> 0. Returns int64 array.
-    Same-shaped images are stacked and hashed with batched matmuls."""
-    out = np.zeros(len(images), dtype=np.int64)
-    groups: dict[tuple[int, int], list[int]] = {}
-    for i, im in enumerate(images):
-        if im is not None:
-            groups.setdefault(im.shape[:2], []).append(i)
-    for idxs in groups.values():
-        stack = np.stack([images[i] for i in idxs])
-        out[np.asarray(idxs)] = phash64_stack(stack)
-    return out
-
-
 def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Vectorized Hamming distance between int64 hash arrays."""
     x = (a.astype(np.uint64) ^ b.astype(np.uint64)).view(np.uint64)
     # popcount via unpackbits on the byte view
     return np.unpackbits(x.view(np.uint8).reshape(len(x), 8), axis=1).sum(axis=1)
-
-
-def band_keys(phash: np.ndarray, n_bands: int = 4) -> np.ndarray:
-    """Split 64-bit hashes into ``n_bands`` contiguous bands for LSH-style
-    near-dup candidate generation: two hashes within Hamming distance
-    ``n_bands - 1`` share at least one full band (pigeonhole). Returns
-    (len, n_bands) int64 array of band values tagged with the band index."""
-    assert 64 % n_bands == 0
-    width = 64 // n_bands
-    u = phash.astype(np.uint64)
-    mask = np.uint64((1 << width) - 1)
-    out = np.empty((len(phash), n_bands), dtype=np.int64)
-    for b in range(n_bands):
-        band = (u >> np.uint64(b * width)) & mask
-        out[:, b] = (band | (np.uint64(b) << np.uint64(width))).astype(np.int64)
-    return out
 
 
 def phash64_dihedral_min(pixels: np.ndarray) -> int:

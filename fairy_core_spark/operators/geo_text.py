@@ -41,7 +41,6 @@ def region_language_mix(
     text_col: str = "text",
     lat_col: str = "lat",
     lon_col: str = "lon",
-    index: str = "grid",
 ) -> DataFrame:
     """Per-region caption-language mix over a geotagged corpus.
 
@@ -72,7 +71,6 @@ def region_language_mix(
         lat_col="lat",
         lon_col="lon",
         out="_pids",
-        index=index,
     )
     per = (
         # two selects: putting explode in the SAME select as lang_id's

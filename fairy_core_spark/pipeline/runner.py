@@ -6,11 +6,15 @@ A job is an ordered list of stages. Each stage:
   inputs (table names) -> transform(spark, {name: DataFrame}) -> output table
 
 On success the runner writes the output through the catalog (snapshot
-fingerprint), appends lineage rows (stage, input fingerprints, rows out,
-wall ms) and per-stage metrics. On re-submit, a stage is **skipped** when
-its recorded input fingerprints and stage version match — so a killed job
-resumes after the last completed stage with byte-identical outputs
-(SURVEY.md §5 item 4 resume test).
+fingerprint), appends lineage rows (stage, input fingerprints, rows out
+from the written snapshot, wall ms), one partition-lineage row per file
+of the catalog's file manifest, and per-stage metrics. On re-submit, a
+stage is **skipped** when its recorded input fingerprints and stage
+version match — so a killed job resumes after the last completed stage
+with byte-identical outputs (SURVEY.md §5 item 4 resume test). Under
+``ParquetDirCatalog``'s content-hash snapshot ids, a recompute that
+writes identical content keeps its snapshot id, so the stages
+downstream of it still skip.
 
 The skip decision needs only catalog snapshot metadata (a JSON read), so
 a stage's inputs are read only when it runs, and the lineage JSONL files
@@ -72,7 +76,7 @@ class PipelineRunner:
     def __init__(self, spark: SparkSession, out_dir: str, catalog: ParquetDirCatalog | None = None):
         self.spark = spark
         # resume/lineage bind ONLY to this interface (read/write/exists/
-        # snapshot) — swapping in an Iceberg-backed catalog (snapshot ids
+        # snapshot/files) — swapping in an Iceberg-backed catalog (snapshot ids
         # from commit metadata, sources/tables.IcebergLikeCatalog shape)
         # changes nothing else in the runner.
         self.catalog = catalog if catalog is not None else ParquetDirCatalog(out_dir)
@@ -123,11 +127,11 @@ class PipelineRunner:
         return sha256_hex(canonical_json(payload).encode())
 
     def _table_dir(self, name: str) -> str:
-        """Filesystem dir of a catalog table. Markers and footer-walk
-        lineage must live where the CATALOG put the data — an injected
-        catalog may root tables away from out_dir (the constructor's
-        catalog seam); falling back to out_dir would write markers into a
-        directory the data never touched."""
+        """Filesystem dir of a catalog table. Markers must live where the
+        CATALOG put the data — an injected catalog may root tables away
+        from out_dir (the constructor's catalog seam); falling back to
+        out_dir would write markers into a directory the data never
+        touched."""
         d = getattr(self.catalog, "_dir", None)
         return d(name) if callable(d) else os.path.join(self.out_dir, name)
 
@@ -157,29 +161,6 @@ class PipelineRunner:
             os.remove(self._marker_path(stage))
         except FileNotFoundError:
             pass
-
-    def _partition_rows(self, table: str) -> list[dict]:
-        """Per-output-partition lineage from parquet footers (metadata-only
-        driver read — no extra Spark pass; at cluster scale this is the
-        Iceberg manifest listing). One row per data file: (file, rows,
-        bytes)."""
-        import pyarrow.parquet as pq
-
-        data_dir = os.path.join(self._table_dir(table), "data")
-        out = []
-        for root, _dirs, files in os.walk(data_dir):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, fn)
-                out.append(
-                    {
-                        "file": os.path.relpath(p, data_dir),
-                        "rows": pq.ParquetFile(p).metadata.num_rows,
-                        "bytes": os.path.getsize(p),
-                    }
-                )
-        return out
 
     def run(
         self,
@@ -233,12 +214,14 @@ class PipelineRunner:
             out_df = stage.transform(self.spark, frames)
             snap = self.catalog.write(out_df, stage.output, partition_by=stage.partition_by)
             wall_ms = int((time.monotonic() - t0) * 1000)
-            parts = self._partition_rows(stage.output)
-            rows_out = sum(p["rows"] for p in parts)
-            for i, p in enumerate(parts):
+            rows_out = snap["rows"]
+            # per-output-file lineage from the catalog's file manifest
+            # (footers only, no Spark pass; the Iceberg manifest listing)
+            for i, f in enumerate(self.catalog.files(stage.output)):
                 self._append(
                     self._partition_lineage_path,
-                    {"stage": stage.name, "fingerprint": fp, "partition_id": i, **p},
+                    {"stage": stage.name, "fingerprint": fp, "partition_id": i,
+                     "file": f["path"], "rows": f["rows"], "bytes": f["bytes"]},
                 )
             self._mark_completed(stage, fp)
             status[stage.name] = "completed"
@@ -309,7 +292,11 @@ def image_pipeline_stages(
         n = spark.sparkContext.defaultParallelism * 2
         prefix = spatial_prefix_col("tile_id", cell_scheme)
         tiled = enc.withColumn("tile_prefix", prefix).repartition(n, "tile_prefix")
-        return tile_aggregates(tiled)
+        # The aggregate emits groups in arrival order, which follows the
+        # order Spark lists the input files in (not fixed); sorting each
+        # partition makes an identical recompute write identical files,
+        # and so keep its snapshot id.
+        return tile_aggregates(tiled).sortWithinPartitions("tile_id")
 
     gen_v = f"1:n={n_images}"  # param change must invalidate the checkpoint
     return [

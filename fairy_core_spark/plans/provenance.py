@@ -11,8 +11,8 @@ Re-implements the reference's provenance semantics for a distributed engine:
   stable across cosmetic re-serialization.
 
 At cluster scale we never re-hash 10^12 rows: a table's identity is its
-snapshot id (Iceberg) / the sha256 of its sorted per-file (path, size,
-mtime-less content hash) manifest (parquet-dir table layer). Whole-file
+snapshot id (Iceberg) / the sha256 of its sorted per-file (partition dir,
+size, content hash) manifest (parquet-dir table layer). Whole-file
 sha256 streaming stays for small driver-side sidecar files only.
 """
 
@@ -35,17 +35,40 @@ def sha256_hex(data: bytes) -> str:
     return hashlib.sha256(data).hexdigest()
 
 
-def sha256_file(path: str, chunk: int = 65536) -> str:
+def sha256_file(path: str, chunk: int = 65536, limit: int | None = None) -> str:
     """Streamed file hash (64 KiB chunks, as the reference's attestation
-    scan does, ``rulepack_runner.py:73-78``). Driver-side, small files only."""
+    scan does, ``rulepack_runner.py:73-78``) of the whole file, or of its
+    first ``limit`` bytes. Driver-side, small files only."""
     h = hashlib.sha256()
+    left = os.path.getsize(path) if limit is None else limit
     with open(path, "rb") as f:
-        while True:
-            b = f.read(chunk)
+        while left > 0:
+            b = f.read(min(chunk, left))
             if not b:
                 break
             h.update(b)
+            left -= len(b)
     return h.hexdigest()
+
+
+def _data_file_sha256(path: str) -> str:
+    """Content hash of one data file of a table. A parquet file is hashed
+    without its footer, whose column-chunk metadata lists encodings in an
+    order that can differ between two JVMs writing the same rows; the
+    pages before the footer plus the file's schema (names, types, writer
+    key-value metadata) stand for its content. Other files: whole-file
+    sha256."""
+    size = os.path.getsize(path)
+    with open(path, "rb") as f:
+        f.seek(max(size - 8, 0))
+        tail = f.read(8)
+    if size < 12 or tail[4:] != b"PAR1":
+        return sha256_file(path)
+    import pyarrow.parquet as pq
+
+    body = size - 8 - int.from_bytes(tail[:4], "little")
+    schema = pq.read_schema(path).to_string(truncate_metadata=False, show_schema_metadata=True)
+    return sha256_hex((sha256_file(path, limit=body) + schema).encode("utf-8"))
 
 
 def compute_params_sha256(params: dict | None) -> str:
@@ -82,7 +105,14 @@ def attestation_id(dataset_id: str) -> str:
 
 def table_fingerprint(path: str) -> str:
     """Identity of a parquet-directory table: sha256 over the sorted
-    (relpath, size, content-sha256) manifest of its data files.
+    (partition dir, size, content-sha256) manifest of its data files.
+
+    File names are left out: Spark names files ``part-NNNNN-<job uuid>``,
+    so two writes of identical content would otherwise get different ids
+    (and a pipeline would re-run every stage downstream of an identical
+    recompute). The partition directory (``k=3``) is kept, because there
+    it carries data. Content hashes skip parquet footers
+    (:func:`_data_file_sha256`), so the id also holds across processes.
 
     This is the parquet-dir stand-in for an Iceberg snapshot id. For tables
     too large to re-hash, production swaps in the snapshot id via the table
@@ -93,12 +123,12 @@ def table_fingerprint(path: str) -> str:
     if os.path.isfile(path):
         return sha256_file(path)
     for root, _dirs, files in os.walk(path):
-        for fn in sorted(files):
+        for fn in files:
             if fn.startswith(("_", ".")):
                 continue
             fp = os.path.join(root, fn)
-            rel = os.path.relpath(fp, path)
-            entries.append((rel, os.path.getsize(fp), sha256_file(fp)))
+            part = os.path.relpath(root, path)
+            entries.append((part, os.path.getsize(fp), _data_file_sha256(fp)))
     entries.sort()
     return sha256_hex(canonical_json(entries).encode("utf-8"))
 

@@ -1760,30 +1760,6 @@ def spatial_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "spatial_pip_rtree",
-    f"""
-    WITH pts AS ({_synth_points_sql('customer', 'c_custkey')})
-    SELECT point_id, polygon_id
-    FROM pts JOIN {_rects_values_sql()}
-      ON lat > lat0 AND lat < lat1 AND lon > lon0 AND lon < lon1
-    """,
-)
-def spatial_pip_rtree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """same containment join through the STR-packed R-tree broadcast index
-    (functions/geometry.py STRtree — the north rule's named structure);
-    must produce the identical pair set as spatial_pip_join's bbox grid."""
-    from fairy_core_spark.spatial.ops import spatial_join_broadcast
-
-    pts = _synth_points(_t(spark, sf_dir, "customer"), "c_custkey")
-    return spatial_join_broadcast(
-        pts.withColumn("point_id", F.col("point_id").cast("string")),
-        _rects_pdf(),
-        id_col="point_id",
-        index="rtree",
-    ).select(F.col("point_id").cast("long").alias("point_id"), "polygon_id")
-
-
-@_q(
     "spatial_pip_anti",
     f"""
     WITH pts AS ({_synth_points_sql('customer', 'c_custkey')})

@@ -22,7 +22,8 @@ Two strategies:
 Storage: an Iceberg-shaped interface with a parquet-directory implementation
 (no Iceberg runtime jar in this sandbox). ``ParquetDirCatalog`` adds the two
 Iceberg semantics the engine needs: a snapshot manifest (checkpoint/resume
-identity) and partition listing (lineage). Swapping in real Iceberg is a
+identity) and a per-file manifest with sizes and row counts (lineage,
+maintenance planning). Swapping in real Iceberg is a
 config change (``spark.sql.catalog...`` + ``spark.table``), not a code change.
 """
 
@@ -163,8 +164,18 @@ class ParquetDirCatalog:
     def exists(self, name: str) -> bool:
         return os.path.exists(os.path.join(self._dir(name), "_snapshot.json"))
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._dir(name), "data"))
+    def data_dir(self, name: str, snapshot_id: str | None = None) -> str:
+        """Directory holding the data files of snapshot ``snapshot_id``
+        (default: the current one) — the one place that decides where a
+        table's data lives; ``read``, ``files``, ``row_count`` and
+        ``write`` all go through it. This catalog keeps only the current
+        snapshot, in ``<table>/data``."""
+        if snapshot_id is not None and snapshot_id != self.snapshot(name)["snapshot_id"]:
+            raise KeyError(f"{type(self).__name__} keeps only the current snapshot of {name!r}")
+        return os.path.join(self._dir(name), "data")
+
+    def read(self, spark: SparkSession, name: str, snapshot_id: str | None = None) -> DataFrame:
+        return spark.read.parquet(self.data_dir(name, snapshot_id))
 
     def snapshot(self, name: str) -> dict:
         with open(os.path.join(self._dir(name), "_snapshot.json")) as f:
@@ -179,7 +190,7 @@ class ParquetDirCatalog:
         snap = self.snapshot(name)
         if "rows" in snap:
             return int(snap["rows"])
-        return parquet_row_count(os.path.join(self._dir(name), "data"))
+        return parquet_row_count(self.data_dir(name))
 
     def _snapshot_id(self, name: str, data_dir: str) -> str:
         """Identity of a freshly written table state. Content hash here;
@@ -196,7 +207,7 @@ class ParquetDirCatalog:
         mode: str = "overwrite",
     ) -> dict:
         d = self._dir(name)
-        data_dir = os.path.join(d, "data")
+        data_dir = self.data_dir(name)
         w = df.write.mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -212,13 +223,16 @@ class ParquetDirCatalog:
             json.dump(snap, f, sort_keys=True, indent=2)
         return snap
 
-    def files(self, name: str) -> list[dict]:
-        """File manifest of the current table state: [{path, bytes}] with
-        paths relative to the table's data dir — the Iceberg
-        manifest-entry analog consumed by maintenance planning
-        (operators/maintenance.compaction_plan). Metadata only: a
-        directory walk + stat, no parquet opened."""
-        data_dir = os.path.join(self._dir(name), "data")
+    def files(self, name: str, snapshot_id: str | None = None) -> list[dict]:
+        """File manifest of a snapshot (current by default):
+        [{path, bytes, rows}] with paths relative to its data dir — the
+        Iceberg manifest-entry analog (file size and record count),
+        consumed by maintenance planning (operators/maintenance.
+        compaction_plan) and the pipeline runner's partition lineage.
+        Metadata only: a directory walk, a stat and a footer per file."""
+        import pyarrow.parquet as pq
+
+        data_dir = self.data_dir(name, snapshot_id)
         out = []
         for root, _dirs, fns in os.walk(data_dir):
             for fn in fns:
@@ -228,19 +242,10 @@ class ParquetDirCatalog:
                         {
                             "path": os.path.relpath(p, data_dir),
                             "bytes": os.path.getsize(p),
+                            "rows": pq.ParquetFile(p).metadata.num_rows,
                         }
                     )
         return sorted(out, key=lambda r: r["path"])
-
-    def partitions(self, name: str) -> list[str]:
-        """Partition directory listing (lineage granularity)."""
-        data_dir = os.path.join(self._dir(name), "data")
-        out = []
-        for root, dirs, _files in os.walk(data_dir):
-            for dn in dirs:
-                if "=" in dn:
-                    out.append(os.path.relpath(os.path.join(root, dn), data_dir))
-        return sorted(out)
 
 
 class IcebergLikeCatalog(ParquetDirCatalog):
@@ -331,11 +336,13 @@ class VersionedParquetDirCatalog(IcebergLikeCatalog):
     Layout per table: each commit writes an immutable ``data-v<seq>/``
     directory and appends ``{seq, snapshot_id, dir, rows, partition_by}``
     to ``_snapshot_log.json``; ``_snapshot.json`` always mirrors the
-    CURRENT entry, so every base-class consumer (PipelineRunner resume,
-    row_count, maintenance manifests) works unchanged.
+    CURRENT entry, and ``data_dir`` resolves a snapshot to its version
+    dir, so every base-class consumer (PipelineRunner resume, row_count,
+    maintenance manifests) works unchanged.
 
-    - ``read(spark, name, snapshot_id=...)`` — time travel to any logged
-      snapshot (Iceberg ``VERSION AS OF``).
+    - ``read(spark, name, snapshot_id=...)`` / ``files(name,
+      snapshot_id=...)`` — time travel to any logged snapshot (Iceberg
+      ``VERSION AS OF``).
     - ``rollback(name, snapshot_id)`` — a NEW commit whose data dir is
       the old snapshot's (Iceberg rollback keeps history immutable and
       appends; it never deletes the intermediate snapshots).
@@ -413,11 +420,10 @@ class VersionedParquetDirCatalog(IcebergLikeCatalog):
         known = [e["snapshot_id"] for e in log]
         raise KeyError(f"snapshot {snapshot_id!r} not in log for {name!r}: {known}")
 
-    def read(
-        self, spark: SparkSession, name: str, snapshot_id: str | None = None
-    ) -> DataFrame:
-        e = self._entry(name, snapshot_id)
-        return spark.read.parquet(os.path.join(self._dir(name), e["dir"]))
+    def data_dir(self, name: str, snapshot_id: str | None = None) -> str:
+        """The ``data-v<seq>/`` dir of a logged snapshot (current by
+        default): time travel for ``read`` and ``files``."""
+        return os.path.join(self._dir(name), self._entry(name, snapshot_id)["dir"])
 
     def rollback(self, name: str, snapshot_id: str) -> dict:
         """Append a NEW commit pointing at ``snapshot_id``'s immutable data
@@ -439,22 +445,6 @@ class VersionedParquetDirCatalog(IcebergLikeCatalog):
 
     def exists(self, name: str) -> bool:
         return bool(self.history(name))
-
-    def files(self, name: str, snapshot_id: str | None = None) -> list[dict]:
-        """File manifest of a snapshot (current by default) — paths
-        relative to that snapshot's data dir, same shape the maintenance
-        planners consume."""
-        e = self._entry(name, snapshot_id)
-        data_dir = os.path.join(self._dir(name), e["dir"])
-        out = []
-        for root, _dirs, fns in os.walk(data_dir):
-            for fn in fns:
-                if fn.endswith(".parquet"):
-                    p = os.path.join(root, fn)
-                    out.append(
-                        {"path": os.path.relpath(p, data_dir), "bytes": os.path.getsize(p)}
-                    )
-        return sorted(out, key=lambda r: r["path"])
 
     def orphan_files(
         self, name: str, keep_snapshot_ids: set[str] | None = None

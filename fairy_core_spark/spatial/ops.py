@@ -5,11 +5,14 @@ semantics pinned there).
 Physical strategy notes (the 100 TB story):
 
 - **encode**: one Arrow pandas_udf projection, no shuffle.
-- **PIP broadcast join**: polygons -> BBoxGridIndex, serialized once and
-  shipped inside the UDF closure (Spark broadcasts task binaries); the
-  points table is scanned once, no shuffle at all. This is the right plan
-  whenever the polygon set fits in executor memory (it's the north rule's
-  "ray-casting PIP against broadcast R-tree indexes").
+- **PIP broadcast join**: polygons -> STRtree (functions/geometry.py),
+  serialized once and shipped inside the UDF closure (Spark broadcasts
+  task binaries); the points table is scanned once, no shuffle at all.
+  This is the right plan whenever the polygon set fits in executor memory
+  (it's the north rule's "ray-casting PIP against broadcast R-tree
+  indexes"). One ``mapInPandas`` serves both output shapes: the
+  row-preserving ``polygon_ids`` annotation, and the pair set as its
+  explode.
 - **PIP cell join**: the non-broadcast fallback: polygons explode to
   covering cells (driver-side numpy over the *small* polygon table), points
   carry their cell — a plain equi-join on cell (shuffle partitioned by
@@ -33,7 +36,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from fairy_core_spark.functions.geometry import EARTH_RADIUS_M, BBoxGridIndex, STRtree, haversine_m
+from fairy_core_spark.functions.geometry import (
+    EARTH_RADIUS_M,
+    STRtree,
+    haversine_m,
+    point_in_ring,
+    polygon_covering_cells,
+)
 from fairy_core_spark.spatial import s2
 
 TILE_LEVEL = 12  # H3 res-7 equivalent (avg cell area ~5.1 km^2)
@@ -172,50 +181,20 @@ def _rings_dict(polygons_pdf: pd.DataFrame) -> dict[str, np.ndarray]:
     return out
 
 
-_INDEX_CLS = {"grid": BBoxGridIndex, "rtree": STRtree}
-
-
-def _make_index(polygons_pdf: pd.DataFrame, index: str):
-    try:
-        cls = _INDEX_CLS[index]
-    except KeyError:
-        raise ValueError(f"unknown polygon index {index!r}; one of {sorted(_INDEX_CLS)}")
-    return cls(_rings_dict(polygons_pdf))
-
-
 def spatial_join_broadcast(
     points: DataFrame,
     polygons_pdf: pd.DataFrame,
     id_col: str = "image_id",
     lat_col: str = "lat",
     lon_col: str = "lon",
-    index: str = "grid",
 ) -> DataFrame:
-    """(point_id, polygon_id) containment pairs; zero-shuffle broadcast plan.
-
-    ``index`` picks the broadcast polygon structure: ``"grid"`` (uniform
-    bbox grid — best for the small/uniform fixture sets) or ``"rtree"``
-    (STR-packed R-tree — balanced under clustered polygon sets; the north
-    rule's named structure). Both refine with the identical ray cast, so
-    the output pair set is the same (tested)."""
-    index = _make_index(polygons_pdf, index)
-    schema = f"{id_col} string, polygon_id string"
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            lat = pdf[lat_col].to_numpy(np.float64)
-            lon = pdf[lon_col].to_numpy(np.float64)
-            pairs = index.contains_batch(lat, lon)
-            if not pairs:
-                continue
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {id_col: [ids[i] for i, _ in pairs], "polygon_id": [p for _, p in pairs]}
-            )
-
-    return points.select(id_col, lat_col, lon_col).mapInPandas(run, schema=schema)
+    """(point_id, polygon_id) containment pairs; zero-shuffle broadcast
+    plan: :func:`spatial_annotate_broadcast` over (id, lat, lon), with the
+    ``polygon_ids`` array exploded into one row per pair."""
+    ann = spatial_annotate_broadcast(
+        points.select(id_col, lat_col, lon_col), polygons_pdf, lat_col, lon_col
+    )
+    return ann.select(id_col, F.explode("polygon_ids").alias("polygon_id"))
 
 
 def spatial_annotate_broadcast(
@@ -224,20 +203,17 @@ def spatial_annotate_broadcast(
     lat_col: str = "lat",
     lon_col: str = "lon",
     out: str = "polygon_ids",
-    index: str = "grid",
 ) -> DataFrame:
     """Broadcast PIP as a row-preserving annotation: every input row kept
     exactly once, with a ``polygon_ids: array<string>`` column of the
-    containing polygons (empty = contained by none). Same containment
-    semantics as :func:`spatial_join_broadcast` (explode the array to get
-    the pair set — tested equal), but it carries the full row through so
-    validate -> encode -> PIP -> tile composes into ONE linear plan with
-    no persist/double-scan and no row multiplication (the pipeline hot
-    path: downstream rollups stay plain count/avg aggregates).
-
-    ``index``: broadcast structure, ``"grid"`` or ``"rtree"`` (see
-    :func:`spatial_join_broadcast`)."""
-    index = _make_index(polygons_pdf, index)
+    containing polygons in polygon order (empty = contained by none).
+    Exploding the array gives the pair set of
+    :func:`spatial_join_broadcast`, which is built that way. Carrying the
+    full row through lets validate -> encode -> PIP -> tile compose into
+    ONE linear plan with no persist/double-scan and no row multiplication
+    (the pipeline hot path: downstream rollups stay plain count/avg
+    aggregates). The polygons go into a broadcast STR R-tree."""
+    index = STRtree(_rings_dict(polygons_pdf))
     in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
     schema = f"{in_schema}, {out} array<string>"
 
@@ -311,7 +287,6 @@ def spatial_join_cells(
     polyfill covering, spatial/hex7.polyfill mode="cover") — the covering
     is a superset either way and the ray-cast refine restores exactness,
     so both schemes produce the identical pair set."""
-    from fairy_core_spark.functions.geometry import polygon_covering_cells
     from fairy_core_spark.spatial import hex7
 
     if scheme == "s2":
@@ -332,9 +307,7 @@ def spatial_join_cells(
     pts = with_cell(points.select(id_col, lat_col, lon_col), lat_col, lon_col, level, scheme=scheme)
     cand = pts.join(F.broadcast(cover), "cell").drop("cell")
 
-    # exact refine per candidate pair (bbox + ray cast inside an Arrow UDF)
-    index = BBoxGridIndex(rings)
-    ring_by_id = {pid: i for i, pid in enumerate(index.ids)}
+    # exact refine per candidate pair (ray cast inside an Arrow UDF)
     schema = f"{id_col} string, polygon_id string"
 
     def refine(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -347,9 +320,7 @@ def spatial_join_cells(
             for pid, grp in pdf.groupby("polygon_id"):
                 idx = grp.index.to_numpy()
                 pos = pdf.index.get_indexer(idx)
-                from fairy_core_spark.functions.geometry import point_in_ring
-
-                keep[pos] = point_in_ring(lat[pos], lon[pos], index.rings[ring_by_id[pid]])
+                keep[pos] = point_in_ring(lat[pos], lon[pos], rings[pid])
             out = pdf.loc[keep, [id_col, "polygon_id"]]
             if len(out):
                 yield out
@@ -690,8 +661,6 @@ def polygons_to_cells(polygons_pdf: pd.DataFrame, level: int = TILE_LEVEL) -> pd
     """vector->raster: polygon ids to member cell sets (covering at tile
     level, exact-center refine). Driver-side numpy (polygon tables are
     small); returns (polygon_id, cell) pandas frame."""
-    from fairy_core_spark.functions.geometry import point_in_ring, polygon_covering_cells
-
     rows = []
     for _, r in polygons_pdf.iterrows():
         ring = np.array([[p["lat"], p["lon"]] for p in r["ring"]], dtype=np.float64)

@@ -43,14 +43,16 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     assert sum(1 for x in lines if x["status"] == "completed") == len(stages)
     assert sum(1 for x in lines if x["status"] == "skipped") == len(stages)
 
-    # version bump (parameter change) invalidates only the changed stage +
-    # its downstream consumers re-read fresh snapshots
+    # version bump (parameter change) recomputes only the changed stage;
+    # its output is identical, so its snapshot id is too (the fingerprint
+    # ignores the writing job's file names) and every consumer skips
     stages3 = image_pipeline_stages(n_images=200, tile_level=10)
     stages3[2].version = "2"  # validate stage logic changed
     r3 = PipelineRunner(spark, out)
     s3 = r3.run(stages3)
     assert s3["gen_images"] == "skipped"
     assert s3["validate"] == "completed"
+    assert [s3[n] for n in ("encode", "spatial_join", "tile")] == ["skipped"] * 3
 
 
 def test_resume_binds_to_snapshot_identity_not_file_bytes(spark, tmp_path):
@@ -196,9 +198,11 @@ def _sorted_rows(spark, out, table):
 
 @pytest.fixture(scope="module")
 def uncrashed_tiles(spark, tmp_path_factory):
+    """(rows, snapshot id) of the ``tiles`` table of an uncrashed run."""
     out = str(tmp_path_factory.mktemp("uncrashed"))
-    PipelineRunner(spark, out).run(image_pipeline_stages(n_images=60, tile_level=8))
-    return _sorted_rows(spark, out, "tiles")
+    r = PipelineRunner(spark, out)
+    r.run(image_pipeline_stages(n_images=60, tile_level=8))
+    return _sorted_rows(spark, out, "tiles"), r.catalog.snapshot("tiles")["snapshot_id"]
 
 
 @pytest.mark.parametrize("crash_at", CRASH_STAGES)
@@ -206,9 +210,8 @@ def test_crash_then_resume_at_every_stage(spark, tmp_path, uncrashed_tiles, cras
     """Stage ``crash_at`` fails partway through its write job (tasks raise
     on some rows). It leaves no completion marker; the resubmit skips
     every stage before it, completes it and every stage after it, and the
-    final ``tiles`` table holds the rows of an uncrashed run. (Rows, not
-    ``table_fingerprint``: that hashes file names, which carry the UUID
-    of the Spark job that wrote them.)"""
+    final ``tiles`` table holds the rows, and has the snapshot id, of an
+    uncrashed run."""
     out = str(tmp_path / "run")
     stages = image_pipeline_stages(n_images=60, tile_level=8)
     names = [s.name for s in stages]
@@ -227,6 +230,32 @@ def test_crash_then_resume_at_every_stage(spark, tmp_path, uncrashed_tiles, cras
         r.run(stages)
     assert not os.path.exists(r._marker_path(stages[k]))
 
-    status = PipelineRunner(spark, out).run(image_pipeline_stages(n_images=60, tile_level=8))
+    r = PipelineRunner(spark, out)
+    status = r.run(image_pipeline_stages(n_images=60, tile_level=8))
     assert [status[n] for n in names] == ["skipped"] * k + ["completed"] * (len(names) - k)
-    assert _sorted_rows(spark, out, "tiles") == uncrashed_tiles
+    want_rows, want_snapshot = uncrashed_tiles
+    assert _sorted_rows(spark, out, "tiles") == want_rows
+    assert r.catalog.snapshot("tiles")["snapshot_id"] == want_snapshot
+
+
+def test_versioned_catalog_run_records_rows_and_partition_lineage(spark, tmp_path):
+    """With the catalog that writes ``<table>/data-v<seq>/``, each stage's
+    ``rows_out`` (lineage and metrics) equals its snapshot's ``rows``, and
+    partition lineage lists the files of that snapshot."""
+    from fairy_core_spark.sources.tables import VersionedParquetDirCatalog
+
+    out = str(tmp_path / "versioned")
+    cat = VersionedParquetDirCatalog(out)
+    stages = image_pipeline_stages(n_images=60, tile_level=8)
+    assert set(PipelineRunner(spark, out, catalog=cat).run(stages).values()) == {"completed"}
+
+    lineage = {x["stage"]: x for x in map(json.loads, open(f"{out}/lineage.jsonl"))}
+    metrics = {x["stage"]: x for x in map(json.loads, open(f"{out}/metrics.jsonl"))}
+    parts = [json.loads(x) for x in open(f"{out}/lineage_partitions.jsonl")]
+    for st in stages:
+        rows = cat.snapshot(st.output)["rows"]
+        assert rows > 0
+        assert lineage[st.name]["rows_out"] == metrics[st.name]["rows_out"] == rows
+        mine = [p for p in parts if p["stage"] == st.name]
+        assert [p["file"] for p in mine] == [f["path"] for f in cat.files(st.output)]
+        assert sum(p["rows"] for p in mine) == rows

@@ -1,6 +1,5 @@
-"""STR-packed R-tree index: structural invariants + exact equality with
-the bbox-grid index and the brute-force ray cast (the two broadcast PIP
-index structures must be interchangeable — identical pair sets)."""
+"""STR-packed R-tree index (the one broadcast PIP polygon index):
+structural invariants + exact equality with the brute-force ray cast."""
 
 from __future__ import annotations
 
@@ -9,7 +8,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from fairy_core_spark.functions.geometry import BBoxGridIndex, STRtree, point_in_ring
+from fairy_core_spark.functions.geometry import STRtree, point_in_ring
 
 
 def _rect(pid: int, lat0: float, lat1: float, lon0: float, lon1: float):
@@ -31,8 +30,8 @@ def _brute(polys: dict[str, np.ndarray], lat: np.ndarray, lon: np.ndarray):
 
 
 def _clustered_polys(n: int, seed: int = 3) -> dict[str, np.ndarray]:
-    """Polygon pileup in one small region — the grid index's skew case,
-    the R-tree's home turf."""
+    """Polygon pileup in one small region — the skewed case a uniform
+    grid index handles badly and the R-tree's balanced packing does not."""
     rng = np.random.default_rng(seed)
     polys = {}
     for i in range(n):
@@ -60,15 +59,17 @@ def test_tree_bboxes_contain_children():
     assert len(t.levels[0][0]) == 1  # single root
 
 
-@pytest.mark.parametrize("n_polys", [1, 2, 17, 137])
+@pytest.mark.parametrize("n_polys", [1, 2, 17, 137, 600])
 def test_rtree_equals_grid_and_bruteforce(n_polys):
+    """R-tree pairs == brute-force ray cast, from one polygon (a root-only
+    tree) up to 600 (a three-level tree). The test id still names the
+    bbox grid index that this test once also compared."""
     polys = _clustered_polys(n_polys)
     rng = np.random.default_rng(11)
     lat = 40.0 + rng.uniform(-3, 3, size=2000)
     lon = -70.0 + rng.uniform(-3, 3, size=2000)
     want = _brute(polys, lat, lon)
     assert set(STRtree(polys).contains_batch(lat, lon)) == want
-    assert set(BBoxGridIndex(polys).contains_batch(lat, lon)) == want
     assert len(want) > 0
 
 

@@ -60,15 +60,6 @@ def test_pip_broadcast_matches_bruteforce(spark, points_pdf, polys):
     assert len(want) > 0  # fixture actually exercises containment
 
 
-def test_pip_broadcast_rtree_matches_bruteforce(spark, points_pdf, polys):
-    points = spark.createDataFrame(points_pdf)
-    got = {
-        (r["image_id"], r["polygon_id"])
-        for r in spatial_join_broadcast(points, polys, index="rtree").collect()
-    }
-    assert got == brute_force_pip(points_pdf, polys)
-
-
 def test_pip_cell_join_matches_broadcast(spark, points_pdf, polys):
     points = spark.createDataFrame(points_pdf)
     got_cells = {

@@ -3,6 +3,8 @@ the knn_join sizing hint (no count() scan for a level decision)."""
 
 from __future__ import annotations
 
+import pytest
+
 from fairy_core_spark.sources.tables import ParquetDirCatalog, parquet_row_count
 
 
@@ -13,6 +15,11 @@ def test_snapshot_carries_rows_and_row_count_matches(spark, tmp_path):
     assert snap["rows"] == 1234
     assert cat.row_count("t1") == 1234
     assert parquet_row_count(str(tmp_path / "t1" / "data")) == 1234
+    # one snapshot only: its id reads the current files, any other id fails
+    assert cat.files("t1", snap["snapshot_id"]) == cat.files("t1")
+    assert sum(f["rows"] for f in cat.files("t1")) == 1234
+    with pytest.raises(KeyError):
+        cat.files("t1", "not-a-snapshot")
 
 
 def test_row_count_falls_back_to_footers_for_old_snapshots(spark, tmp_path):
@@ -96,3 +103,37 @@ def test_versioned_catalog_time_travel_and_rollback(spark, tmp_path):
         cat.write(v1, "t", mode="append")
     with pytest.raises(FileNotFoundError):
         cat.read(spark, "missing")
+
+
+def test_table_fingerprint_ignores_file_names_and_parquet_footers(tmp_path):
+    """Same rows written under other file names, or with a footer that
+    differs (a writer's column-chunk metadata is not byte-stable across
+    JVMs), keep the fingerprint; other rows, or the same file in another
+    partition directory, change it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fairy_core_spark.plans.provenance import sha256_file, table_fingerprint
+
+    def table(dirname, fname, rows, part="k=1"):
+        d = tmp_path / dirname / part
+        d.mkdir(parents=True)
+        pq.write_table(pa.table({"id": rows}), str(d / fname))
+        return str(tmp_path / dirname), str(d / fname)
+
+    a, _ = table("a", "part-00000-1111.parquet", [1, 2, 3])
+    b, fb = table("b", "part-00000-2222.parquet", [1, 2, 3])
+    assert table_fingerprint(a) == table_fingerprint(b)
+
+    # flip one character of the writer string, which only the footer holds
+    data = bytearray(open(fb, "rb").read())
+    at = data.rindex(b"parquet-cpp")
+    data[at] = ord("P")
+    before = sha256_file(fb)
+    open(fb, "wb").write(bytes(data))
+    assert sha256_file(fb) != before
+    assert table_fingerprint(b) == table_fingerprint(a)
+
+    c, _ = table("c", "part-00000-1111.parquet", [1, 2, 4])
+    d, _ = table("d", "part-00000-1111.parquet", [1, 2, 3], part="k=2")
+    assert len({table_fingerprint(x) for x in (a, c, d)}) == 3
