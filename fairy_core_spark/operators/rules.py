@@ -39,15 +39,18 @@ MAX_REMEDIATION_LINKS = 20  # display cap, mirrored from rulepack_runner.py:28
 
 def _java_regex_error(regex: str) -> str | None:
     """Message if ``regex`` does not compile under java.util.regex (the
-    engine rlike actually runs), else None. Best-effort: without an active
-    JVM the check is skipped and a bad pattern surfaces at execution."""
+    engine rlike actually runs), else None. Best-effort: without a running
+    JVM the check is skipped and a bad pattern surfaces at execution. The
+    JVM is reached through the process-wide SparkContext, not
+    ``SparkSession.getActiveSession()``, which is thread-local and returns
+    None on a pool thread."""
     try:
-        from pyspark.sql import SparkSession
+        from pyspark import SparkContext
 
-        spark = SparkSession.getActiveSession()
-        if spark is None:
+        sc = SparkContext._active_spark_context
+        if sc is None:
             return None
-        spark._jvm.java.util.regex.Pattern.compile(regex)
+        sc._jvm.java.util.regex.Pattern.compile(regex)
         return None
     except Exception as e:  # Py4JJavaError with PatternSyntaxException inside
         msg = str(getattr(e, "java_exception", None) or e)

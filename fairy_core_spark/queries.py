@@ -65,6 +65,7 @@ from fairy_core_spark.operators.text import (
     registered_domain_sql as _registered_domain_sql,
     token_count,
 )
+from fairy_core_spark.sources.tables import read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
@@ -81,8 +82,11 @@ def _q(name: str, sql: str | None = None):
     return deco
 
 
+# Every entry reads its tables through here, and a session reads the same
+# few files again and again: read_parquet infers each file's schema once,
+# so only the first read of an unchanged file pays an inference job.
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # -------- session-scoped memo of persisted frames shared across entries.

@@ -25,17 +25,23 @@ Iceberg semantics the engine needs: a snapshot manifest (checkpoint/resume
 identity) and a per-file manifest with sizes and row counts (lineage,
 maintenance planning). Swapping in real Iceberg is a
 config change (``spark.sql.catalog...`` + ``spark.table``), not a code change.
+
+Parquet reads (inputs, catalog tables, the query registry) go through
+``read_parquet``, which keeps the schema Spark inferred for a file so a
+re-read of the unchanged file runs no inference job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from fairy_core_spark.plans.provenance import table_fingerprint
 
@@ -115,6 +121,62 @@ def with_row_id_ingest(df: DataFrame) -> DataFrame:
     )
 
 
+# Parquet schemas Spark inferred, per session: (applicationId, path) ->
+# (file stamp, StructType). See read_parquet.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file under ``path`` (or of
+    ``path`` itself), sorted; None when the driver cannot stat it (a
+    non-local URI, a glob, a missing path)."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        out = []
+        for root, _dirs, fns in os.walk(path):
+            for fn in fns:
+                p = os.path.join(root, fn)
+                st = os.stat(p)
+                out.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a repeated schema-inference job.
+
+    Inferring a parquet schema is a Spark job (footer reads) on every read.
+    The schema Spark inferred is kept for the session, keyed on the path and
+    the name, size and ``mtime_ns`` of every file under it; a re-read of an
+    unchanged file or table directory passes that schema and plans with no
+    job. Any rewrite changes the stamp, so the next read infers afresh and
+    replaces the path's entry.
+    Paths the driver cannot stat (non-local URIs) read exactly as
+    ``spark.read.parquet``. Entries of earlier SparkSessions are evicted by
+    ``applicationId``, like ``queries._memo_df``."""
+    stamp = _file_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    app = spark.sparkContext.applicationId
+    key = (app, path)
+    with _SCHEMAS_LOCK:
+        for k in [k for k in _SCHEMAS if k[0] != app]:
+            del _SCHEMAS[k]
+        known = _SCHEMAS.get(key)
+    if known is not None and known[0] == stamp:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def read_input(
     spark: SparkSession,
     path: str,
@@ -128,7 +190,7 @@ def read_input(
     if fmt is None:
         fmt = "tsv" if path.endswith((".tsv", ".tab")) else "csv"
     if fmt == "parquet":
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     else:
         sep = "\t" if fmt == "tsv" else ","
         df = (
@@ -175,7 +237,7 @@ class ParquetDirCatalog:
         return os.path.join(self._dir(name), "data")
 
     def read(self, spark: SparkSession, name: str, snapshot_id: str | None = None) -> DataFrame:
-        return spark.read.parquet(self.data_dir(name, snapshot_id))
+        return read_parquet(spark, self.data_dir(name, snapshot_id))
 
     def snapshot(self, name: str) -> dict:
         with open(os.path.join(self._dir(name), "_snapshot.json")) as f:

@@ -1,4 +1,5 @@
-"""Test helpers: report normalization for golden comparison.
+"""Test helpers: report normalization for golden comparison, and a Spark
+job counter.
 
 Same normalization the golden generator applies (strip engine identity,
 volatile attestation keys, absolute paths) — the role of the reference's
@@ -29,3 +30,13 @@ def normalize_report(report: dict) -> dict:
     if "inputs" in md:
         md["inputs"] = {k: os.path.basename(v) for k, v in md["inputs"].items()}
     return out
+
+
+def spark_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs started while it ran, read from
+    the DAG scheduler's job-id counter (threads included, unlike a job
+    group)."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first = scheduler.nextJobId()
+    out = fn()
+    return out, scheduler.nextJobId() - first

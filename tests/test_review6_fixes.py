@@ -84,6 +84,26 @@ def test_java_invalid_regex_degrades_to_one_rule(spark, tmp_path):
     assert by_id["r-good"]["status"] == "PASS"  # the rest of the pack ran
 
 
+def test_java_regex_check_runs_on_any_thread(spark):
+    """The Java pre-check must not depend on the thread: on a thread where
+    ``SparkSession.getActiveSession()`` is None it used to be skipped, and
+    the bad pattern then aborted the whole fused aggregate."""
+    import threading
+
+    from fairy_core_spark.operators.rules import compile_rule
+    from fairy_core_spark.rulepack.loader import Rule
+
+    rule = Rule("r-bad", "regex", "fail", {"column": "v", "regex": r"(?P<x>ok)"})
+    out = {}
+    t = threading.Thread(target=lambda: out.update(cr=compile_rule(rule, ["v"], ["t"])))
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive()
+    status, evidence = out["cr"].error
+    assert status == "FAIL"
+    assert evidence["error"] == "runtime_error"
+
+
 def test_sanitized_rule_id_collision_keeps_counts_separate(spark, tmp_path):
     """'a.b' and 'a-b' both sanitize to a_b; without per-rule ordinals in
     the fused-aggregate aliases, one rule silently reads the other's

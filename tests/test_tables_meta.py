@@ -1,11 +1,19 @@
 """Metadata-only row counts on the parquet-dir catalog and their use as
-the knn_join sizing hint (no count() scan for a level decision)."""
+the knn_join sizing hint (no count() scan for a level decision), and the
+session's parquet schema memo (no inference job for a re-read)."""
 
 from __future__ import annotations
 
 import pytest
 
-from fairy_core_spark.sources.tables import ParquetDirCatalog, parquet_row_count
+from fairy_core_spark.sources import tables
+from fairy_core_spark.sources.tables import (
+    ParquetDirCatalog,
+    parquet_row_count,
+    read_input,
+    read_parquet,
+)
+from tests.helpers import spark_jobs
 
 
 def test_snapshot_carries_rows_and_row_count_matches(spark, tmp_path):
@@ -137,3 +145,100 @@ def test_table_fingerprint_ignores_file_names_and_parquet_footers(tmp_path):
     c, _ = table("c", "part-00000-1111.parquet", [1, 2, 4])
     d, _ = table("d", "part-00000-1111.parquet", [1, 2, 3], part="k=2")
     assert len({table_fingerprint(x) for x in (a, c, d)}) == 3
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+    return str(path)
+
+
+def test_reread_of_unchanged_parquet_runs_no_job(spark, tmp_path):
+    p = _write(tmp_path / "t.parquet", id=[1, 2, 3], v=["a", "b", "c"])
+    first, n_first = spark_jobs(spark, lambda: read_input(spark, p))
+    again, n_again = spark_jobs(spark, lambda: read_input(spark, p))
+    assert n_first >= 1  # Spark's own schema inference
+    assert n_again == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_overwritten_parquet_reads_its_new_schema(spark, tmp_path):
+    p = _write(tmp_path / "t.parquet", id=[1, 2])
+    assert read_input(spark, p).columns == ["id"]
+    _write(tmp_path / "t.parquet", id=[1, 2], w=[0.5, 1.5])
+    df = read_input(spark, p)
+    assert df.columns == ["id", "w"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 0.5), (2, 1.5)]
+
+
+def test_catalog_table_rewritten_in_place_reads_its_new_schema(spark, tmp_path):
+    cat = ParquetDirCatalog(str(tmp_path))
+    cat.write(spark.range(0, 10), "t")
+    assert cat.read(spark, "t").columns == ["id"]
+    cat.write(spark.range(0, 10).selectExpr("id", "id * 2 AS twice"), "t")
+    df = cat.read(spark, "t")
+    assert df.columns == ["id", "twice"]
+    assert df.where("twice = id * 2").count() == 10
+
+
+def test_schema_memo_evicts_entries_of_other_sessions(spark, tmp_path):
+    from pyspark.sql.types import StructType
+
+    p = _write(tmp_path / "t.parquet", id=[1])
+    stale = ("app-of-a-stopped-session", p)
+    tables._SCHEMAS[stale] = ((), StructType([]))
+    read_parquet(spark, p)
+    assert stale not in tables._SCHEMAS
+    assert {k[0] for k in tables._SCHEMAS} == {spark.sparkContext.applicationId}
+
+
+def test_paths_the_driver_cannot_stat_read_as_spark_does(spark, tmp_path):
+    p = _write(tmp_path / "t.parquet", id=[1, 2])
+    uri = "file://" + p  # a URI, not a local path: os.stat cannot see it
+    df, _ = spark_jobs(spark, lambda: read_parquet(spark, uri))
+    _, n_again = spark_jobs(spark, lambda: read_parquet(spark, uri))
+    assert n_again >= 1  # nothing memoised: Spark infers again
+    assert not any(k[1] == uri for k in tables._SCHEMAS)
+    assert df.schema == spark.read.parquet(p).schema
+    assert sorted(r["id"] for r in df.collect()) == [1, 2]
+
+
+def test_schema_memo_under_concurrent_reads(spark, tmp_path):
+    """More reader threads than cores, a short switch interval, and entries
+    of another session landing meanwhile: every read sees its own file's
+    schema, and only this session's entries survive."""
+    import sys
+    import threading
+
+    paths = [_write(tmp_path / f"t{i}.parquet", **{f"c{i}": [i]}) for i in range(4)]
+    errors = []
+
+    def reader(k):
+        try:
+            for j in range(5):
+                with tables._SCHEMAS_LOCK:
+                    tables._SCHEMAS[("app-of-a-stopped-session", f"{k}/{j}")] = ((), None)
+                i = (k + j) % len(paths)
+                assert read_parquet(spark, paths[i]).columns == [f"c{i}"]
+        except Exception as e:  # noqa: BLE001 - reported by the main thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader, args=(k,)) for k in range(12)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    read_parquet(spark, paths[0])  # evicts what the last readers added
+    app = spark.sparkContext.applicationId
+    assert {k[0] for k in tables._SCHEMAS} == {app}
+    assert all((app, p) in tables._SCHEMAS for p in paths)
