@@ -6,6 +6,13 @@ median(block). This module is the engine's *definition* of phash: the data
 generator, the integrity rule (recompute-vs-stored) and the dedup operators
 all share it.
 
+Ties are decided as in exact arithmetic: a coefficient counts as "above"
+the median only when it exceeds it by more than ``_TIE_RTOL * max|block|``.
+The synthetic images hit exact ties (for w == h the DCT block is symmetric,
+c[k,l] == c[l,k] for k,l >= 1, so a mirrored pair can straddle the median),
+and in float64 the last-ulp rounding of the BLAS matmul would decide such a
+tie — rounding that differs per CPU kernel, so the hash would too.
+
 Everything is batched: ``phash64_stack`` hashes a stack of N same-sized
 images with two broadcast matrix multiplies — no per-pixel Python.
 """
@@ -31,6 +38,21 @@ def _dct_matrix(n: int) -> np.ndarray:
 
 _LUMA = np.array([0.299, 0.587, 0.114])
 
+# Tie tolerance, relative to max|block|. Each coefficient is two 32-term dot
+# products with |D| <= 0.25 and gray >= 0, so its float64 error is at most
+# 128u * DC ~ 2.8e-14 * max|block|: 1e-12 clears the rounding of
+# coeff - median by > 17x yet sits ~2400x below the smallest genuine gap to
+# the median on the datagen corpus (2.4e-9 * max|block|).
+_TIE_RTOL = 1e-12
+
+
+def _bits_above_median(block: np.ndarray) -> np.ndarray:
+    """(..., 64) DCT blocks -> bool bits: coeff > median(block), with
+    float ties (within ``_TIE_RTOL * max|block|``) decided as not above."""
+    med = np.median(block, axis=-1, keepdims=True)
+    tol = _TIE_RTOL * np.abs(block).max(axis=-1, keepdims=True)
+    return block > med + tol
+
 
 def gray_pool_stack(stack: np.ndarray, gh: int, gw: int) -> np.ndarray:
     """(N, h, w, 3) uint8 -> (N, gh, gw) float64 grayscale via BT.601 luma:
@@ -54,13 +76,14 @@ def _to_gray_32(pixels: np.ndarray) -> np.ndarray:
 
 def phash64(pixels: np.ndarray) -> int:
     """Perceptual hash of one uint8 HxWx3 image -> signed 64-bit int
-    (LongType-safe: bit 63 is the sign bit)."""
+    (LongType-safe: bit 63 is the sign bit). Bit i is set iff coeff i is
+    above the block median by more than float rounding: exact ties (the
+    symmetric pairs of a square datagen image) never set a bit, whatever
+    the CPU's BLAS kernel rounds them to."""
     g = _to_gray_32(pixels)
     d = _dct_matrix(32)
     coeffs = d @ g @ d.T
-    block = coeffs[:8, :8].ravel()
-    med = np.median(block)
-    bits = block > med
+    bits = _bits_above_median(coeffs[:8, :8].ravel())
     v = 0
     for b in bits:
         v = (v << 1) | int(b)
@@ -77,13 +100,14 @@ def _gray32_stack(stack: np.ndarray) -> np.ndarray:
 def phash64_stack(stack: np.ndarray) -> np.ndarray:
     """Vectorized :func:`phash64` over a (N, h, w, 3) uint8 stack of
     same-sized images -> int64 array. Bit-identical to the scalar path
-    (same gray/DCT/median pipeline, batched matmuls)."""
+    (same gray/DCT/median pipeline and the same tie rule, batched matmuls).
+    The tie rule is what keeps the hash off the matmul's last-ulp rounding,
+    which differs between BLAS kernels and so between CPUs."""
     g = _gray32_stack(stack)
     d = _dct_matrix(32)
     coeffs = np.matmul(np.matmul(d, g), d.T)  # (N,32,32), broadcast matmul
     block = coeffs[:, :8, :8].reshape(len(g), 64)
-    med = np.median(block, axis=1, keepdims=True)
-    bits = (block > med).astype(np.uint8)
+    bits = _bits_above_median(block).astype(np.uint8)
     # pack 64 bits (MSB-first, same order as the scalar shift loop)
     packed = np.packbits(bits, axis=1)  # (N, 8) big-endian bytes
     u = packed.astype(np.uint64) << (np.uint64(8) * np.arange(7, -1, -1, dtype=np.uint64))

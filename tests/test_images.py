@@ -253,3 +253,86 @@ def test_png_up_filter_round_trips_and_unknown_filter_fails_decode(spark):
         for r in with_image_checks(df, reference_pixels=lambda *_: None).collect()
     }
     assert got == {"up": (True, True), "avg": (False, False)}
+
+
+# 32x32 PPM rows of the 3000-image datagen table (i % 9 == 0 picks ppm at
+# w = h = 32; row 999 is the planted dup of a 64x48 image, not one of them)
+_PPM32_IDS = [f"img{i:010d}" for i in range(0, 3000, 9) if i % 1000 != 999]
+
+
+@pytest.mark.parametrize("direction", [np.inf, -np.inf])
+def test_phash_ties_do_not_follow_last_ulp_rounding(monkeypatch, direction):
+    """Square datagen images carry exact ties in the DCT block
+    (c[k,l] == c[l,k] for k,l >= 1); float64 rounding, which differs per
+    BLAS kernel and so per CPU, must not decide them. A 1-ulp nudge of
+    every DCT basis entry stands in for a different CPU's rounding."""
+    from fairy_core_spark.datagen.images import make_pixels_stack
+    from fairy_core_spark.functions import phash
+
+    stack = make_pixels_stack(_PPM32_IDS, 32, 32)
+    assert len(stack) == 333
+    base = phash.phash64_stack(stack)
+    nudged = np.nextafter(phash._dct_matrix(32), direction)
+    monkeypatch.setitem(phash._DCT_CACHE, 32, nudged)
+    moved = [iid for iid, a, b in zip(_PPM32_IDS, base, phash.phash64_stack(stack)) if a != b]
+    assert moved == [], f"{len(moved)} of {len(stack)} hashes follow the rounding"
+
+
+def test_phash_symmetric_tie_sets_neither_bit():
+    # img0000000126: coefficients (3,7) and (7,3) are equal and hold the
+    # 32nd/33rd sorted places, so both equal the median -> bits 32 and 4 clear
+    h = synth_image_row(126)["phash"]
+    assert (h >> 32) & 1 == 0
+    assert (h >> 4) & 1 == 0
+
+
+def _phash_exact(pixels: np.ndarray) -> int:
+    """The written pHash recipe at 40 significant digits: integer BT.601
+    luma (299r + 587g + 114b)/1000, block mean (or nearest-index) pool to
+    32x32, orthonormal DCT-II, top-left 8x8, bit iff coeff > median. The
+    positive luma/pool scale is dropped (it cannot move a bit); a gap under
+    1e-30 of max|block| is a tie of the exact values, 21 orders of magnitude
+    below the smallest genuine gap on the datagen corpus (2.4e-9)."""
+    mp = pytest.importorskip("mpmath")
+    px = pixels.astype(np.int64)
+    gray = 299 * px[..., 0] + 587 * px[..., 1] + 114 * px[..., 2]
+    h, w = gray.shape
+    if h % 32 or w % 32:
+        yi = (np.arange(32) * h // 32).clip(0, h - 1)
+        xi = (np.arange(32) * w // 32).clip(0, w - 1)
+        g = gray[yi][:, xi]
+    else:
+        g = gray.reshape(32, h // 32, 32, w // 32).sum(axis=(1, 3))
+    g = g.tolist()
+    with mp.workdps(40):
+        d = [
+            [
+                mp.cos(mp.pi * (2 * i + 1) * k / 64) * mp.sqrt(mp.mpf(1) / (32 if k == 0 else 16))
+                for i in range(32)
+            ]
+            for k in range(8)
+        ]
+        rows = [[mp.fdot(d[k], [g[i][j] for i in range(32)]) for j in range(32)] for k in range(8)]
+        block = [mp.fdot(rows[k], d[l]) for k in range(8) for l in range(8)]
+        s = sorted(block)
+        med = (s[31] + s[32]) / 2
+        tie = max(abs(c) for c in block) * mp.mpf(10) ** -30
+        v = 0
+        for c in block:
+            v = (v << 1) | int(c - med > tie)
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+@pytest.mark.parametrize(
+    "i, fmt, hw",
+    [
+        (126, "ppm", (32, 32)),  # tied pair (3,7)/(7,3) at the median
+        (8, "qnt", (64, 64)),  # tied pair at the median
+        (1617, "ppm", (64, 32)),  # tied pair at the median
+    ],
+)
+def test_phash_matches_exact_recipe(i, fmt, hw):
+    row = synth_image_row(i)
+    px = decode_image(bytes(row["bytes"]), row["fmt"])
+    assert (row["fmt"], px.shape[:2]) == (fmt, hw)
+    assert row["phash"] == phash64(px) == _phash_exact(px)
