@@ -19,4 +19,10 @@ Designed for 1000-executor clusters over 100 TB Iceberg tables; tested on
 local[32] parquet directories through a swappable table layer.
 """
 
+from fairy_core_spark import _zipimport
+
+# Python workers import this package to unpickle every engine function; from
+# then on their per-task import-cache reset skips unchanged zip archives
+_zipimport.install()
+
 __version__ = "0.1.0"

@@ -37,7 +37,13 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from fairy_core_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", shuffle_partitions=16)
+    # no console progress bar: its carriage-return runs would swallow the
+    # OK/FAIL lines of a log written to a file
+    spark = get_spark(
+        app_name="oracle-check",
+        shuffle_partitions=16,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
