@@ -1,5 +1,6 @@
 """Lakehouse table-maintenance planning over FILE METADATA (the Iceberg
-manifest analog in sources/tables.ParquetDirCatalog) — never over data.
+manifest analog: ``sources/tables.ParquetDirCatalog.files``, whose
+``orphan_files`` plans the deletes) — never over data.
 
 A 10^12-image table accretes small files from streaming ingest and
 per-partition writers; the standard maintenance action is bin-packing

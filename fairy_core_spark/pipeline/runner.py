@@ -5,21 +5,25 @@ metrics tables (north rule; fingerprint idea from the reference's ADR-0006
 A job is an ordered list of stages. Each stage:
   inputs (table names) -> transform(spark, {name: DataFrame}) -> output table
 
-On success the runner writes the output through the catalog (snapshot
-fingerprint), appends lineage rows (stage, input fingerprints, rows out
-from the written snapshot, wall ms), one partition-lineage row per file
+On success the runner commits the output through the catalog, with the
+stage fingerprint (stage name, version and input snapshot ids) in the
+commit's summary, and appends lineage rows (stage, input snapshot ids,
+rows out from the commit, wall ms), one partition-lineage row per file
 of the catalog's file manifest, and per-stage metrics. On re-submit, a
-stage is **skipped** when its recorded input fingerprints and stage
-version match — so a killed job resumes after the last completed stage
-with byte-identical outputs (SURVEY.md §5 item 4 resume test). Under
-``ParquetDirCatalog``'s content-hash snapshot ids, a recompute that
-writes identical content keeps its snapshot id, so the stages
-downstream of it still skip.
+stage is **skipped** when its output table's current commit carries the
+stage's fingerprint — so a killed job resumes after the last completed
+stage with byte-identical outputs (SURVEY.md §5 item 4 resume test). A
+write that crashes commits nothing, so its table keeps the previous
+snapshot and that snapshot's fingerprint. Snapshot ids are content
+hashes, so a recompute that writes the same rows, in any file order,
+keeps its snapshot id and the stages downstream of it still skip.
 
-The skip decision needs only catalog snapshot metadata (a JSON read), so
-a stage's inputs are read only when it runs, and the lineage JSONL files
+The skip decision reads only the newest commit file of each table, so a
+stage's inputs are read only when it runs, and the lineage JSONL files
 are mirrored to parquet on the driver with pyarrow: a re-submit that
-skips every stage runs no Spark job.
+skips every stage runs no Spark job. An out_dir in an older layout
+(``<table>/data`` with ``_snapshot.json``) has no commits, so it reads as
+empty and every stage recomputes.
 
 The flagship pipeline (validate -> encode -> spatial-join -> tile) is
 assembled in ``image_pipeline`` and submitted via::
@@ -75,10 +79,9 @@ def _json_inferred_shape(arr):
 class PipelineRunner:
     def __init__(self, spark: SparkSession, out_dir: str, catalog: ParquetDirCatalog | None = None):
         self.spark = spark
-        # resume/lineage bind ONLY to this interface (read/write/exists/
-        # snapshot/files) — swapping in an Iceberg-backed catalog (snapshot ids
-        # from commit metadata, sources/tables.IcebergLikeCatalog shape)
-        # changes nothing else in the runner.
+        # resume/lineage bind ONLY to this interface (read/write/snapshot/
+        # files) — swapping in an Iceberg-backed catalog (snapshot ids from
+        # commit metadata) changes nothing else in the runner.
         self.catalog = catalog if catalog is not None else ParquetDirCatalog(out_dir)
         self.out_dir = out_dir
         os.makedirs(out_dir, exist_ok=True)
@@ -126,42 +129,6 @@ class PipelineRunner:
         payload = {"stage": stage.name, "version": stage.version, "inputs": input_snaps}
         return sha256_hex(canonical_json(payload).encode())
 
-    def _table_dir(self, name: str) -> str:
-        """Filesystem dir of a catalog table. Markers must live where the
-        CATALOG put the data — an injected catalog may root tables away
-        from out_dir (the constructor's catalog seam); falling back to
-        out_dir would write markers into a directory the data never
-        touched."""
-        d = getattr(self.catalog, "_dir", None)
-        return d(name) if callable(d) else os.path.join(self.out_dir, name)
-
-    def _marker_path(self, stage: Stage) -> str:
-        return os.path.join(self._table_dir(stage.output), "_stage_fingerprint")
-
-    def _completed_fingerprint(self, stage: Stage) -> str | None:
-        marker = self._marker_path(stage)
-        if os.path.exists(marker):
-            with open(marker) as f:
-                return f.read().strip()
-        return None
-
-    def _mark_completed(self, stage: Stage, fp: str) -> None:
-        marker = self._marker_path(stage)
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        with open(marker, "w") as f:
-            f.write(fp)
-
-    def _invalidate_marker(self, stage: Stage) -> None:
-        """Drop the completion marker BEFORE a recompute starts writing.
-        Without this, a crash mid-overwrite leaves the old marker next to
-        partial data; a later resubmit whose fingerprint happens to match
-        the stale marker (e.g. a reverted version bump) would then skip
-        over a corrupt table."""
-        try:
-            os.remove(self._marker_path(stage))
-        except FileNotFoundError:
-            pass
-
     def run(
         self,
         stages: list[Stage],
@@ -197,7 +164,12 @@ class PipelineRunner:
                     input_snaps[name] = f"source:{name}:volatile-{os.urandom(8).hex()}"
             fp = self._stage_fingerprint(stage, input_snaps)
 
-            if self.catalog.exists(stage.output) and self._completed_fingerprint(stage) == fp:
+            out = stage.output
+            try:
+                done = self.catalog.snapshot(out)["summary"].get("stage_fingerprint")
+            except FileNotFoundError:  # no commit yet
+                done = None
+            if done == fp:
                 status[stage.name] = "skipped"
                 self._append(
                     self._lineage_path,
@@ -206,24 +178,24 @@ class PipelineRunner:
                 continue
 
             t0 = time.monotonic()
-            self._invalidate_marker(stage)  # crash mid-write must not leave a valid marker
             frames = {
                 name: sources[name] if name in sources else self.catalog.read(self.spark, name)
                 for name in stage.inputs
             }
             out_df = stage.transform(self.spark, frames)
-            snap = self.catalog.write(out_df, stage.output, partition_by=stage.partition_by)
+            snap = self.catalog.write(
+                out_df, out, partition_by=stage.partition_by, summary={"stage_fingerprint": fp}
+            )
             wall_ms = int((time.monotonic() - t0) * 1000)
             rows_out = snap["rows"]
             # per-output-file lineage from the catalog's file manifest
             # (footers only, no Spark pass; the Iceberg manifest listing)
-            for i, f in enumerate(self.catalog.files(stage.output)):
+            for i, f in enumerate(self.catalog.files(out)):
                 self._append(
                     self._partition_lineage_path,
                     {"stage": stage.name, "fingerprint": fp, "partition_id": i,
                      "file": f["path"], "rows": f["rows"], "bytes": f["bytes"]},
                 )
-            self._mark_completed(stage, fp)
             status[stage.name] = "completed"
             self._append(
                 self._lineage_path,
@@ -292,11 +264,7 @@ def image_pipeline_stages(
         n = spark.sparkContext.defaultParallelism * 2
         prefix = spatial_prefix_col("tile_id", cell_scheme)
         tiled = enc.withColumn("tile_prefix", prefix).repartition(n, "tile_prefix")
-        # The aggregate emits groups in arrival order, which follows the
-        # order Spark lists the input files in (not fixed); sorting each
-        # partition makes an identical recompute write identical files,
-        # and so keep its snapshot id.
-        return tile_aggregates(tiled).sortWithinPartitions("tile_id")
+        return tile_aggregates(tiled)
 
     gen_v = f"1:n={n_images}"  # param change must invalidate the checkpoint
     return [

@@ -11,9 +11,11 @@ Re-implements the reference's provenance semantics for a distributed engine:
   stable across cosmetic re-serialization.
 
 At cluster scale we never re-hash 10^12 rows: a table's identity is its
-snapshot id (Iceberg) / the sha256 of its sorted per-file (partition dir,
-size, content hash) manifest (parquet-dir table layer). Whole-file
-sha256 streaming stays for small driver-side sidecar files only.
+snapshot id (Iceberg, or the content id the parquet-dir catalog's write
+job observes). A parquet-directory input of a report is attested by the
+sha256 of its sorted per-file (partition dir, size, content hash)
+manifest. Whole-file sha256 streaming stays for small driver-side sidecar
+files only.
 """
 
 from __future__ import annotations
@@ -108,16 +110,15 @@ def table_fingerprint(path: str) -> str:
     (partition dir, size, content-sha256) manifest of its data files.
 
     File names are left out: Spark names files ``part-NNNNN-<job uuid>``,
-    so two writes of identical content would otherwise get different ids
-    (and a pipeline would re-run every stage downstream of an identical
-    recompute). The partition directory (``k=3``) is kept, because there
-    it carries data. Content hashes skip parquet footers
-    (:func:`_data_file_sha256`), so the id also holds across processes.
+    so two writes of identical content would otherwise get different ids.
+    The partition directory (``k=3``) is kept, because there it carries
+    data. Content hashes skip parquet footers (:func:`_data_file_sha256`),
+    so the id also holds across processes.
 
-    This is the parquet-dir stand-in for an Iceberg snapshot id. For tables
-    too large to re-hash, production swaps in the snapshot id via the table
-    layer; the fingerprint *contract* (stable string per immutable snapshot)
-    is identical.
+    Report attestation uses it for parquet-directory inputs. Catalog
+    tables are not re-hashed: their snapshot id comes from the write job
+    (``sources/tables.ParquetDirCatalog``); the *contract* (stable string
+    per immutable snapshot) is identical.
     """
     entries = []
     if os.path.isfile(path):

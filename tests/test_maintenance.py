@@ -4,8 +4,11 @@ over a real ParquetDirCatalog file manifest."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from fairy_core_spark.operators.maintenance import compaction_plan, compaction_plan_sql
@@ -213,39 +216,37 @@ def test_expire_snapshots_plan_same_day_orders_by_commit_time(spark):
 
 
 def test_orphan_files_plan(spark, tmp_path):
-    """deleteOrphanFiles analog: version dirs outside the kept snapshot
-    set + stray writer debris surface; kept dirs and catalog metadata
-    never do; default keeps every logged snapshot."""
-    from pyspark.sql import functions as F
+    """deleteOrphanFiles analog: data dirs outside the kept snapshot set,
+    the dir of a write that crashed, and stray writer debris surface;
+    kept dirs' members and commit files never do; default keeps every
+    committed snapshot."""
+    from fairy_core_spark.sources.tables import ParquetDirCatalog
 
-    from fairy_core_spark.sources.tables import VersionedParquetDirCatalog
-
-    cat = VersionedParquetDirCatalog(str(tmp_path))
+    cat = ParquetDirCatalog(str(tmp_path))
     df = spark.range(10).select(F.col("id").alias("k"))
     s0 = cat.write(df, "t")
     s1 = cat.write(df.withColumn("k", F.col("k") + 1), "t")
     s2 = cat.write(df.withColumn("k", F.col("k") + 2), "t")
+    d0, d1, d2 = s0["dir"], s1["dir"], s2["dir"]
+    # a write that crashes mid-job leaves an uncommitted data dir
+    crashing = df.withColumn("k", F.when(F.col("k") == 9, F.raise_error(F.lit("crash"))))
+    with pytest.raises(Exception, match="crash"):
+        cat.write(crashing, "t")
+    (crashed,) = set(os.listdir(tmp_path / "t")) - {d0, d1, d2, "_commits"}
     # crashed-writer debris
-    stray = tmp_path / "t" / "data-v1" / "_temporary_chunk"
-    stray.write_text("junk")
-    top_stray = tmp_path / "t" / "leftover.tmp"
-    top_stray.write_text("junk")
-    live_stray = tmp_path / "t" / "data-v2" / "part-00000.parquet.tmp"
-    live_stray.write_text("junk")
+    (tmp_path / "t" / d1 / "_temporary_chunk").write_text("junk")
+    (tmp_path / "t" / "leftover.tmp").write_text("junk")
+    (tmp_path / "t" / d2 / "part-00000.parquet.tmp").write_text("junk")
+    (tmp_path / "t" / "_commits" / ".3-abc.tmp").write_text("{}")
 
-    # keep only the newest snapshot: v0 + v1 files orphan, incl. the stray
+    # keep only the newest snapshot: the older data dirs orphan whole
     got = cat.orphan_files("t", {s2["snapshot_id"]})
-    assert "leftover.tmp" in got
-    assert any(p.startswith("data-v0/") for p in got)
-    assert any(p == "data-v1/_temporary_chunk" for p in got)
-    # the kept dir reports its non-parquet debris, never its members
-    assert [p for p in got if p.startswith("data-v2/")] == [
-        "data-v2/part-00000.parquet.tmp"
-    ]
-    assert not any(p.endswith("_snapshot.json") for p in got)
+    assert got == sorted(
+        [d0, d1, crashed, "leftover.tmp", "_commits/.3-abc.tmp", f"{d2}/part-00000.parquet.tmp"]
+    )
 
-    # default: all logged snapshots kept -> only true strays
-    got_all = cat.orphan_files("t")
-    assert got_all == [
-        "data-v1/_temporary_chunk", "data-v2/part-00000.parquet.tmp", "leftover.tmp"
-    ]
+    # default: all committed snapshots kept -> only true strays
+    assert cat.orphan_files("t") == sorted(
+        [crashed, "leftover.tmp", "_commits/.3-abc.tmp",
+         f"{d1}/_temporary_chunk", f"{d2}/part-00000.parquet.tmp"]
+    )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from fairy_core_spark.pipeline.runner import PipelineRunner, Stage, image_pipeline_stages
 from fairy_core_spark.plans.provenance import table_fingerprint
+from fairy_core_spark.sources.tables import ParquetDirCatalog
 
 
 def test_resume_skips_completed_stages(spark, tmp_path):
@@ -22,7 +23,7 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     s1 = r1.run(stages)
     assert all(v == "completed" for v in s1.values())
     tiles_snap_1 = r1.catalog.snapshot("tiles")["snapshot_id"]
-    tiles_fp_1 = table_fingerprint(f"{out}/tiles/data")
+    tiles_fp_1 = table_fingerprint(r1.catalog.data_dir("tiles"))
 
     # resubmit: everything skips, outputs untouched, and no Spark job runs
     # (inputs are read only for stages that execute; mirrors are driver-side)
@@ -36,7 +37,7 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("resubmit") == []
     assert all(v == "skipped" for v in s2.values())
     assert r2.catalog.snapshot("tiles")["snapshot_id"] == tiles_snap_1
-    assert table_fingerprint(f"{out}/tiles/data") == tiles_fp_1
+    assert table_fingerprint(r2.catalog.data_dir("tiles")) == tiles_fp_1
 
     # lineage recorded both passes
     lines = [json.loads(x) for x in open(f"{out}/lineage.jsonl")]
@@ -44,8 +45,8 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     assert sum(1 for x in lines if x["status"] == "skipped") == len(stages)
 
     # version bump (parameter change) recomputes only the changed stage;
-    # its output is identical, so its snapshot id is too (the fingerprint
-    # ignores the writing job's file names) and every consumer skips
+    # its output is identical, so its snapshot id is too (a content hash,
+    # blind to file names and row order) and every consumer skips
     stages3 = image_pipeline_stages(n_images=200, tile_level=10)
     stages3[2].version = "2"  # validate stage logic changed
     r3 = PipelineRunner(spark, out)
@@ -56,36 +57,29 @@ def test_resume_skips_completed_stages(spark, tmp_path):
 
 
 def test_resume_binds_to_snapshot_identity_not_file_bytes(spark, tmp_path):
-    """The Iceberg seam: with a catalog whose snapshot ids are commit
-    metadata (IcebergLikeCatalog), flipping an input table's snapshot id —
-    data files untouched — must re-execute every downstream stage, exactly
-    as a new Iceberg commit would. Proves the runner fingerprints inputs by
-    snapshot identity, not by hashing bytes itself."""
-    from fairy_core_spark.sources.tables import IcebergLikeCatalog
+    """The Iceberg seam: a catalog whose ``images`` table reports another
+    snapshot id — data files untouched, as under a new Iceberg commit of
+    the same bytes — must re-execute the stage that consumes it. Proves
+    the runner fingerprints inputs by snapshot identity, not by hashing
+    bytes itself."""
+
+    class RecommittedImages(ParquetDirCatalog):
+        def snapshot(self, name):
+            snap = super().snapshot(name)
+            return {**snap, "snapshot_id": "commit-7"} if name == "images" else snap
 
     out = str(tmp_path / "iceberg_run")
-    stages = image_pipeline_stages(n_images=150, tile_level=9)
+    r1 = PipelineRunner(spark, out)
+    assert set(r1.run(image_pipeline_stages(150, 9)).values()) == {"completed"}
+    assert set(PipelineRunner(spark, out).run(image_pipeline_stages(150, 9)).values()) == {"skipped"}
 
-    cat1 = IcebergLikeCatalog(out)
-    r1 = PipelineRunner(spark, out, catalog=cat1)
-    s1 = r1.run(stages)
-    assert all(v == "completed" for v in s1.values())
-    # commit-sequence ids, not sha256 file hashes
-    assert cat1.snapshot("images")["snapshot_id"] == "commit-0"
-
-    # resubmit: same snapshot ids -> all skipped
-    r2 = PipelineRunner(spark, out, catalog=IcebergLikeCatalog(out))
-    assert all(v == "skipped" for v in r2.run(image_pipeline_stages(150, 9)).values())
-
-    # upstream commit: flip the images snapshot id ONLY (bytes identical)
-    cat3 = IcebergLikeCatalog(out)
-    cat3.set_snapshot_id("images", "commit-7")
-    r3 = PipelineRunner(spark, out, catalog=cat3)
+    r3 = PipelineRunner(spark, out, catalog=RecommittedImages(out))
     s3 = r3.run(image_pipeline_stages(150, 9))
     assert s3["gen_images"] == "skipped"  # source stage: no catalog inputs
     assert s3["validate"] == "completed"  # consumes images -> re-executed
-    # downstream of validate re-executes too (validated got a new commit id)
-    assert s3["encode"] == "completed"
+    # validate wrote the same rows, so ``validated`` kept its content id
+    # and the stages downstream of it skip
+    assert [s3[n] for n in ("encode", "spatial_join", "tile")] == ["skipped"] * 3
 
 
 def test_injected_sources_never_stale_skip(spark, tmp_path):
@@ -117,10 +111,9 @@ def test_injected_sources_never_stale_skip(spark, tmp_path):
 
 
 def test_crash_mid_recompute_cannot_leave_valid_marker(spark, tmp_path):
-    """The completion marker is invalidated BEFORE a recompute writes: a
-    stage that crashes mid-overwrite must not leave the old marker behind,
-    or a later resubmit with the original fingerprint would skip over
-    partial data."""
+    """A recompute whose write job crashes commits nothing: the table still
+    reads the previous rows under the previous snapshot id, and a resubmit
+    of the original version skips over that intact data."""
     out = str(tmp_path / "crash")
 
     def gen(spark_, _frames):
@@ -129,21 +122,19 @@ def test_crash_mid_recompute_cannot_leave_valid_marker(spark, tmp_path):
     stages = [Stage("gen", [], gen, "t")]
     r = PipelineRunner(spark, out)
     assert r.run(stages)["gen"] == "completed"
-    marker = os.path.join(out, "t", "_stage_fingerprint")
-    assert os.path.exists(marker)
+    before = r.catalog.snapshot("t")
 
     def boom(spark_, _frames):
-        raise RuntimeError("killed mid-recompute")
+        last = F.col("id") == 4
+        return spark_.range(0, 5).withColumn(
+            "id", F.when(last, F.raise_error(F.lit("killed mid-recompute"))).otherwise(F.col("id"))
+        )
 
-    crashing = [Stage("gen", [], boom, "t", version="2")]
-    try:
-        r.run(crashing)
-    except RuntimeError:
-        pass
-    assert not os.path.exists(marker)  # stale marker gone
-    # revert to the original version: must RECOMPUTE (not skip) because the
-    # marker no longer vouches for the (possibly partial) table state
-    assert r.run(stages)["gen"] == "completed"
+    with pytest.raises(Exception, match="killed mid-recompute"):
+        r.run([Stage("gen", [], boom, "t", version="2")])
+    assert r.catalog.snapshot("t") == before
+    assert sorted(x["id"] for x in r.catalog.read(spark, "t").collect()) == list(range(5))
+    assert r.run(stages)["gen"] == "skipped"
 
 
 def _assert_mirror_matches_jsonl(spark, out, jsonl, table):
@@ -193,7 +184,7 @@ CRASH_STAGES = ("validate", "encode", "spatial_join", "tile")
 
 
 def _sorted_rows(spark, out, table):
-    return sorted(spark.read.parquet(f"{out}/{table}/data").collect())
+    return sorted(ParquetDirCatalog(out).read(spark, table).collect())
 
 
 @pytest.fixture(scope="module")
@@ -208,7 +199,7 @@ def uncrashed_tiles(spark, tmp_path_factory):
 @pytest.mark.parametrize("crash_at", CRASH_STAGES)
 def test_crash_then_resume_at_every_stage(spark, tmp_path, uncrashed_tiles, crash_at):
     """Stage ``crash_at`` fails partway through its write job (tasks raise
-    on some rows). It leaves no completion marker; the resubmit skips
+    on some rows). It commits nothing; the resubmit skips
     every stage before it, completes it and every stage after it, and the
     final ``tiles`` table holds the rows, and has the snapshot id, of an
     uncrashed run."""
@@ -228,7 +219,7 @@ def test_crash_then_resume_at_every_stage(spark, tmp_path, uncrashed_tiles, cras
     r = PipelineRunner(spark, out)
     with pytest.raises(Exception, match="injected crash"):
         r.run(stages)
-    assert not os.path.exists(r._marker_path(stages[k]))
+    assert not r.catalog.exists(stages[k].output)
 
     r = PipelineRunner(spark, out)
     status = r.run(image_pipeline_stages(n_images=60, tile_level=8))
@@ -239,13 +230,11 @@ def test_crash_then_resume_at_every_stage(spark, tmp_path, uncrashed_tiles, cras
 
 
 def test_versioned_catalog_run_records_rows_and_partition_lineage(spark, tmp_path):
-    """With the catalog that writes ``<table>/data-v<seq>/``, each stage's
-    ``rows_out`` (lineage and metrics) equals its snapshot's ``rows``, and
-    partition lineage lists the files of that snapshot."""
-    from fairy_core_spark.sources.tables import VersionedParquetDirCatalog
-
+    """Each stage's ``rows_out`` (lineage and metrics) equals its
+    snapshot's ``rows``, and partition lineage lists the files of that
+    snapshot's ``data-<token>/`` dir."""
     out = str(tmp_path / "versioned")
-    cat = VersionedParquetDirCatalog(out)
+    cat = ParquetDirCatalog(out)
     stages = image_pipeline_stages(n_images=60, tile_level=8)
     assert set(PipelineRunner(spark, out, catalog=cat).run(stages).values()) == {"completed"}
 

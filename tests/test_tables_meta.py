@@ -1,15 +1,19 @@
-"""Metadata-only row counts on the parquet-dir catalog and their use as
-the knn_join sizing hint (no count() scan for a level decision), and the
-session's parquet schema memo (no inference job for a re-read)."""
+"""The parquet-dir catalog (metadata-only row counts and their use as the
+knn_join sizing hint, content snapshot ids, put-if-absent commits, time
+travel), and the session's parquet schema memo (no inference job for a
+re-read)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from fairy_core_spark.sources import tables
 from fairy_core_spark.sources.tables import (
+    CommitConflict,
     ParquetDirCatalog,
-    parquet_row_count,
     read_input,
     read_parquet,
 )
@@ -22,26 +26,12 @@ def test_snapshot_carries_rows_and_row_count_matches(spark, tmp_path):
     snap = cat.write(df, "t1", partition_by=["grp"])
     assert snap["rows"] == 1234
     assert cat.row_count("t1") == 1234
-    assert parquet_row_count(str(tmp_path / "t1" / "data")) == 1234
-    # one snapshot only: its id reads the current files, any other id fails
+    assert cat.read(spark, "t1").count() == 1234
+    # its id reads the current files, an id never committed fails
     assert cat.files("t1", snap["snapshot_id"]) == cat.files("t1")
     assert sum(f["rows"] for f in cat.files("t1")) == 1234
     with pytest.raises(KeyError):
         cat.files("t1", "not-a-snapshot")
-
-
-def test_row_count_falls_back_to_footers_for_old_snapshots(spark, tmp_path):
-    import json
-    import os
-
-    cat = ParquetDirCatalog(str(tmp_path))
-    cat.write(spark.range(0, 321), "t2")
-    # simulate a pre-rows snapshot
-    p = os.path.join(str(tmp_path), "t2", "_snapshot.json")
-    snap = json.load(open(p))
-    snap.pop("rows")
-    json.dump(snap, open(p, "w"))
-    assert cat.row_count("t2") == 321
 
 
 def test_knn_n_points_hint_matches_default(spark):
@@ -69,48 +59,125 @@ def test_knn_n_points_hint_matches_default(spark):
 
 def test_versioned_catalog_time_travel_and_rollback(spark, tmp_path):
     """Snapshot log: commits append immutable versions; time travel reads
-    any logged snapshot; rollback is a NEW commit over the old data dir
-    (history preserved); base-class consumers see the current entry."""
-    import pytest
-
-    from fairy_core_spark.sources.tables import VersionedParquetDirCatalog
-
-    cat = VersionedParquetDirCatalog(str(tmp_path))
+    any logged snapshot; rollback is a NEW commit over the old data dir,
+    under the old snapshot's id (history preserved)."""
+    cat = ParquetDirCatalog(str(tmp_path))
     v1 = spark.range(0, 10).selectExpr("id", "id * 2 AS v")
     v2 = spark.range(0, 4).selectExpr("id", "id * 3 AS v")
 
     s1 = cat.write(v1, "t")
     s2 = cat.write(v2, "t")
-    assert (s1["snapshot_id"], s2["snapshot_id"]) == ("commit-0", "commit-1")
-    assert cat.snapshot("t")["snapshot_id"] == "commit-1"  # base-class view
+    assert (s1["seq"], s2["seq"]) == (0, 1)
+    assert s1["snapshot_id"] != s2["snapshot_id"]
+    assert s1["dir"] != s2["dir"]
+    assert cat.snapshot("t") == s2
     assert cat.row_count("t") == 4
 
     # current read = v2; time travel = v1
     assert cat.read(spark, "t").count() == 4
-    old = cat.read(spark, "t", snapshot_id="commit-0")
+    old = cat.read(spark, "t", snapshot_id=s1["snapshot_id"])
     assert old.count() == 10
     assert {r["v"] for r in old.collect()} == {i * 2 for i in range(10)}
 
-    # rollback appends commit-2 pointing at v1's data; history intact
-    s3 = cat.rollback("t", "commit-0")
-    assert s3["snapshot_id"] == "commit-2" and s3["rows"] == 10
+    # rollback appends commit 2 with v1's id and data; history intact
+    s3 = cat.rollback("t", s1["snapshot_id"])
+    assert (s3["seq"], s3["snapshot_id"], s3["dir"], s3["rows"]) == (
+        2, s1["snapshot_id"], s1["dir"], 10,
+    )
     assert cat.read(spark, "t").count() == 10
-    assert [e["snapshot_id"] for e in cat.history("t")] == [
-        "commit-0", "commit-1", "commit-2",
-    ]
-    assert cat.history("t")[-1]["rolled_back_to"] == "commit-0"
+    assert [e["seq"] for e in cat.history("t")] == [0, 1, 2]
+    assert cat.history("t")[-1]["rolled_back_to"] == s1["snapshot_id"]
     # the intermediate snapshot stays readable (snapshot isolation)
-    assert cat.read(spark, "t", snapshot_id="commit-1").count() == 4
+    assert cat.read(spark, "t", snapshot_id=s2["snapshot_id"]).count() == 4
     # per-snapshot manifests differ
-    assert cat.files("t", "commit-0") == cat.files("t", "commit-2")
-    assert cat.files("t", "commit-1") != cat.files("t", "commit-0")
+    assert cat.files("t", s1["snapshot_id"]) == cat.files("t")
+    assert cat.files("t", s2["snapshot_id"]) != cat.files("t")
 
     with pytest.raises(KeyError, match="not in log"):
         cat.read(spark, "t", snapshot_id="commit-9")
-    with pytest.raises(ValueError, match="overwrite"):
-        cat.write(v1, "t", mode="append")
     with pytest.raises(FileNotFoundError):
         cat.read(spark, "missing")
+
+
+def test_crash_during_write_keeps_previous_snapshot(spark, tmp_path):
+    """A write whose last row fails commits nothing: the table reads the
+    previous snapshot intact, under its own id, and the crashed write's
+    data dir is an orphan."""
+    cat = ParquetDirCatalog(str(tmp_path))
+    first = cat.write(spark.range(0, 1000), "t")
+    last = F.col("id") == 1999
+    crashing = spark.range(0, 2000).withColumn(
+        "id", F.when(last, F.raise_error(F.lit("injected crash"))).otherwise(F.col("id"))
+    )
+    with pytest.raises(Exception, match="injected crash"):
+        cat.write(crashing, "t")
+    assert cat.snapshot("t") == first
+    assert cat.row_count("t") == 1000
+    assert sorted(r["id"] for r in cat.read(spark, "t").collect()) == list(range(1000))
+    crashed = [e for e in os.listdir(tmp_path / "t") if e.startswith("data-") and e != first["dir"]]
+    assert len(crashed) == 1
+    assert cat.orphan_files("t") == crashed
+
+
+def test_commit_race_has_one_winner(spark, tmp_path):
+    """Two writers that start from the same snapshot: the one that commits
+    second gets CommitConflict, and history grows by one commit."""
+    root = str(tmp_path)
+    ParquetDirCatalog(root).write(spark.range(0, 3), "t")
+    a, b = ParquetDirCatalog(root), ParquetDirCatalog(root)
+    a_commit = a._commit
+    won = []
+
+    def b_commits_first(name, entry):
+        # ``a`` has written its data and is about to commit ``entry``
+        # (seq 1); ``b`` starts and commits its own seq 1 in between
+        won.append(b.write(spark.range(0, 5), "t"))
+        return a_commit(name, entry)
+
+    a._commit = b_commits_first
+    with pytest.raises(CommitConflict):
+        a.write(spark.range(0, 4), "t")
+    assert [e["seq"] for e in a.history("t")] == [0, 1]
+    assert a.snapshot("t") == won[0] and a.row_count("t") == 5
+    assert len(a.orphan_files("t")) == 1  # the loser's data dir
+
+
+def test_snapshot_id_is_content_not_layout(spark, tmp_path):
+    """The snapshot id depends on the rows, the schema and partition_by,
+    not on file layout or row order; an empty table gets one too; 100k
+    row hashes sum without overflow under ANSI."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    cat = ParquetDirCatalog(str(tmp_path))
+    df = spark.range(0, 100_000).selectExpr(
+        "id", "id % 13 AS k", "IF(id % 7 = 0, NULL, id * 3) AS v", "IF(id % 5 = 0, NULL, 'x') AS s"
+    )
+
+    def sid(frame, name, partition_by=("k",)):
+        return cat.write(frame, name, partition_by=list(partition_by))["snapshot_id"]
+
+    same = {
+        sid(df, "as_is"),
+        sid(df.repartition(7, "k"), "repartitioned"),
+        sid(df.coalesce(1), "coalesced"),
+        sid(df.orderBy(F.desc("id")), "reversed"),
+    }
+    assert len(same) == 1
+    assert cat.row_count("coalesced") == 100_000
+
+    small = spark.createDataFrame([(1, None, 2)], "id long, a long, b long")
+    moved = spark.createDataFrame([(1, 2, None)], "id long, a long, b long")
+    retyped = small.selectExpr("id", "a", "CAST(b AS int) AS b")
+    ids = {
+        sid(small, "small", ()),
+        sid(moved, "moved", ()),
+        sid(retyped, "retyped", ()),
+        sid(small, "by_id", ("id",)),
+    }
+    assert len(ids) == 4
+
+    empty = cat.write(df.where("false"), "empty")
+    assert empty["rows"] == 0 and cat.row_count("empty") == 0
+    assert empty["snapshot_id"] not in same | ids
 
 
 def test_table_fingerprint_ignores_file_names_and_parquet_footers(tmp_path):
